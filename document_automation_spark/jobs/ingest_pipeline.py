@@ -8,15 +8,27 @@
                                      artifacts off the same gated pages
       → durable extraction          (plans/checkpoint.run_extraction_job:
                                      bucketed write + resume manifests)
-      → curation                    (operators/curate.curate_extracted:
-                                     quarantine drop, gates, exact dedup —
-                                     physical copy or tombstone view)
-      → [--cut-dup-spans]           exact-substring span surgery
-      → [--dedup-paragraphs]        CCNet cross-document paragraph dedup
-      → [--embed]                   hash-embed + dense vector ids →
+      → curation                    (operators/curate: quarantine drop,
+                                     gates, exact dedup — physical copy,
+                                     tombstone view or fused into the write)
+      → corpus stages, one runner, in this order (_corpus_stages):
+          [--fix-encoding]          mojibake repair + exact re-dedup
+          [--dedup-against PRIOR]   cross-snapshot dedup against a prior
+                                     corpus ("xsnap")
+          [--cut-dup-spans]         exact-substring span surgery
+          [--dedup-paragraphs]      CCNet cross-document paragraph dedup
+          [--quality-filter]        Gopher/C4 repetition gate
+          [--decontaminate / --redact-pii]
+                                    corpus hygiene: eval-set n-gram drop,
+                                     PII redaction
+          [--quality-classifier]    GPT-3-style learned quality filter
+          [--dsir-target]           DSIR importance resampling
+          [--train-bpe]             BPE merge table + per-row token counts
+          [--embed]                 hash-embed + dense vector ids →
                                      embeddings table (the ANN/serving input)
-      → [--semantic-dedup T]        SemDeDup over those embeddings (corpus
+          [--semantic-dedup T]      SemDeDup over those embeddings (corpus
                                      + embeddings both cut)
+          [--pack-seqlen N]         LM-batcher chunk map
       → curated passages table + per-stage stats
 
 This is the composition a reference user runs end to end (the reference's
@@ -44,6 +56,8 @@ import os
 import sys
 
 from contextlib import contextmanager
+from types import SimpleNamespace
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +84,44 @@ def _rederive_identities(df: DataFrame, text_col: str = "content") -> DataFrame:
     return df.withColumn(
         "doc_id", F.sha2(F.concat(F.col("url"), F.col(text_col)), 256)
     ).withColumn("content_sha", F.unhex(F.sha2(F.col(text_col), 256)))
+
+
+def _release(cache: list) -> None:
+    """Unpersist every handle in the registry and empty it — targeted,
+    never clearCache() (the caller may hold persisted data of its own)."""
+    while cache:
+        cache.pop().unpersist()
+
+
+def _counters(obs: Observation | None, prefix: str = "") -> dict:
+    """An Observation's metrics as summary ints (sum() is NULL on empty input)."""
+    return {f"{prefix}{k}": int(v or 0) for k, v in obs.get.items()} if obs else {}
+
+
+def _paragraph_mode(spec: str) -> tuple[str, bool, int] | None:
+    """Parse ``first[+norm]`` / ``common[+norm][:MIN_DOCS]`` into
+    (mode, normalize, min_docs); None when malformed."""
+    mode, _, min_docs = spec.partition(":")
+    mode, _, flag = mode.partition("+")
+    # 'common:3+norm' (the natural mis-ordering of '+norm') must fail here,
+    # not hours later at the paragraph stage's int() call
+    if mode not in ("first", "common") or flag not in ("", "norm") or (
+        min_docs and not min_docs.isdigit()
+    ):
+        return None
+    return mode, flag == "norm", int(min_docs or 2)
+
+
+class Stage(NamedTuple):
+    """One corpus stage of the runner.  ``apply(docs, rows_in, write)``
+    gets the current curated table with ``content`` renamed to ``text``
+    and the number of rows in it; a stage that produces a new curated
+    table hands it to ``write(df, table)``, which returns its row count.
+    ``apply`` returns the stage's summary counters."""
+
+    name: str  # the keyword(s) that switch the stage on
+    enabled: bool
+    apply: Callable[..., dict]
 
 
 def run_ingest_pipeline(
@@ -113,6 +165,10 @@ def run_ingest_pipeline(
 ) -> dict:
     """Run the whole recipe; returns a summary dict (stage counters).
 
+    Every cross-stage rule is checked (``_validate``) before any Spark job
+    runs.  The corpus-stage keywords are documented at their entries in
+    :func:`_corpus_stages`.
+
     ``curated_mode``: ``"copy"`` (default) materializes the curated
     passages as a second physical table — right for a one-shot training
     dump read many times.  ``"view"`` materializes only the dup-loser
@@ -125,358 +181,123 @@ def run_ingest_pipeline(
     rows retained with ``error`` set — filter ``error IS NULL`` to read
     the curated view); fastest wall-clock at small/medium scale, at the
     cost of persisting the extracted rows for the job's duration (the
-    dup-loser subquery reads them twice).  ``cut_dup_spans`` requires
-    ``"copy"`` (span surgery rewrites text, so a physical table exists
-    anyway).
+    dup-loser subquery reads them twice).  Every corpus stage but
+    ``embed`` requires ``"copy"``: they read or rewrite the physical
+    curated table.
 
     ``from_text=True`` takes the WET path (documents_from_text over the
     pre-extracted ``text`` column) instead of HTML/PDF extraction; both
     paths run through ``run_extraction_job`` (via its ``docs_fn``
     parameter), so the WET path gets the identical durable write, resume
     manifests, and real per-bucket counters.
-
-    ``cut_dup_spans=True`` appends exact-substring span surgery (Lee et
-    al. 2022, ``operators.dedup.duplicate_spans``/``cut_spans``): every
-    ≥``span_k``-char window occurring in ≥2 curated passages is cut from
-    ALL of them (the policy of Lee et al.'s released ExactSubstr tool —
-    cross-document repeated substrings at this length are boilerplate).
-    Runs over the WRITTEN curated table (one extra corpus read/write; the
-    gram explode is the operator's inherent cost) and re-derives BOTH
-    content-derived identities (``doc_id``, ``content_sha``) for surgered
-    rows; the summary gains ``cut_chars`` /
-    ``spanned_passages`` and ``curated_path`` points at the surgered
-    table.
-
-    ``dedup_paragraphs_mode`` appends CCNet-style cross-document
-    PARAGRAPH dedup (``operators.dedup.dedup_paragraphs``) over the
-    curated passages: ``'first'`` keeps the globally-first copy of every
-    duplicated paragraph, ``'common[:MIN_DOCS]'`` cuts paragraphs shared
-    by ≥ MIN_DOCS distinct passages everywhere (template boilerplate —
-    cookie banners, navigation stubs); a ``'+norm'`` suffix on either
-    mode keys on the CCNet hash normalization (case / accents / digits /
-    unicode punctuation folded) so boilerplate VARIANTS dedup together.
-    Passages emptied by the cut are
-    dropped; identities re-derived as in the span stage.  Summary gains
-    ``dropped_paragraphs`` / ``para_deduped_passages`` /
-    ``para_emptied_passages``.  Requires ``curated_mode='copy'``.
-
-    ``robots_path`` prepends the robots-exclusion opt-out gate
-    (``operators.robots``): pages whose host's robots.txt disallows
-    ``robots_agent`` (Google-REP precedence) are dropped BEFORE url dedup
-    and extraction — the retroactive opt-out pass a responsible LLM
-    pipeline runs against a robots snapshot table ``(host, robots_txt)``.
-    Summary gains ``robots_blocked``.
-
-    ``semantic_dedup_threshold`` appends SemDeDup
-    (``operators.similarity.semantic_dedup``) over the embeddings the
-    ``embed`` stage just wrote: k-means clusters
-    (``semantic_clusters``), within-cluster cosine pairs ≥ threshold,
-    keep the farthest-from-centroid member of every semantic group.
-    Loser PASSAGES are anti-joined out of the corpus AND the embeddings
-    table (vector ids keep their values — gaps mark dedup losers), so
-    the ANN/serving input never serves dropped content.  Runs before
-    ``pack_seqlen`` so chunk maps are built over the deduped corpus.
-    Summary gains ``semdedup_dropped`` and ``n_vectors`` shrinks to the
-    survivors.  Requires ``embed=True`` and ``curated_mode='copy'``.
-
-    ``quality_filter=True`` appends the Gopher/C4 repetition gate
-    (``operators.webtext_quality.filter_by_quality``; thresholds from
-    ``quality_rules``, default the published Gopher bounds) over the
-    final curated table — a zero-shuffle expression gate whose per-rule
-    drop counters ride the write as Observation metrics (summary gains
-    ``quality_n_docs`` / ``quality_n_kept`` / ``quality_drop_<rule>``
-    and ``curated_path`` moves to the filtered table).  Requires
-    ``curated_mode='copy'`` like span surgery (the gate re-reads text).
-
-    ``decontaminate_path`` / ``pii_redact`` append the corpus-HYGIENE
-    stage: GPT-3-style n-gram benchmark decontamination (drop every doc
-    sharing a ``decontaminate_ngram``-gram with the eval-set parquet at
-    ``decontaminate_path`` — ``operators.decontaminate``) and/or PII
-    redaction (``operators.pii.redact_pii``; content-derived identities
-    re-derived after the rewrite).  Both compose into ONE plan + ONE
-    write; counters land in the summary as ``decontam_*`` / ``pii_*``.
-    Requires ``curated_mode='copy'``.
-
-    ``classifier_good_path`` appends the GPT-3-style learned quality
-    filter (``operators.quality_classifier``): train reference-vs-crawl
-    logistic regression (positives = the trusted parquet's ``text``
-    column, negatives = a deterministic hash-sample of the corpus
-    itself), score every curated doc in the same map pass as the write,
-    keep iff ``pareto(classifier_alpha) > 1 - score`` (importance
-    sampling, not a hard cut).  Summary gains ``classifier_n_docs`` /
-    ``classifier_n_kept``; ``curated_path`` moves to the filtered table
-    which carries a ``quality_score`` column.  Requires
-    ``curated_mode='copy'``.
-
-    ``fix_encoding=True`` appends the encoding-repair stage
-    (``operators.encoding.repair_mojibake``): ftfy-style
-    UTF-8-as-cp1252 mojibake repair as one single-pass JVM expression
-    over the curated text.  Runs FIRST among the optional stages —
-    before cross-snapshot dedup (a re-crawled page stored corrupted
-    must match its repaired copy in the prior corpus, so content
-    identity is made canonical before any comparison), before
-    span/paragraph dedup (repaired variants of the same text must dedup
-    together) and before every scoring stage (the LM / quality /
-    classifier legs never see corrupted bytes); identities re-derived
-    as in every rewriting stage, and (when ``drop_exact_dups``) the exact
-    keeper rule is re-applied on the repaired shas — curation's dedup
-    keyed on UNREPAIRED content, so a clean copy and a corrupted copy of
-    the same text in one snapshot both survived it and collide only
-    here.  Summary gains ``mojibake_repaired`` (surviving repaired rows
-    — a repaired row that then loses the re-applied dedup counts in) +
-    ``mojibake_dedup_losers``.  Requires ``curated_mode='copy'``.
-
-    ``dedup_against_path`` appends cross-snapshot incremental dedup
-    (``operators.curate.dedup_against_corpus``): drop every curated row
-    whose content already exists in the previously-published corpus at
-    that path — the Common-Crawl monthly-snapshot recipe (most of each
-    snapshot is carry-over; dropping it here spares every later stage).
-    ``trust_existing_sha=True`` prunes the existing-corpus scan to its
-    ``content_sha`` column alone (pass it only for corpora written by
-    this engine's durable writer).  Summary gains ``xsnap_rows_in`` /
-    ``xsnap_rows_kept``.  Requires ``curated_mode='copy'``.  Runs right
-    after curation (only encoding repair precedes it, to canonicalize
-    content identity first) so carried-over rows never reach span
-    surgery / quality / hygiene / classifier.
-
-    ``dsir_target_path`` appends DSIR importance resampling
-    (``operators.dsir``): fit hashed-ngram bucket models to the trusted
-    target parquet vs the curated corpus itself, score every doc by the
-    log-ratio sum, and Gumbel-top-k the best ``dsir_keep_frac`` of the
-    corpus — distribution matching where the classifier stage is quality
-    thresholding; they compose (classifier first, then DSIR).  Uses the
-    xxhash64 fast path (the oracle-parity md5 leg lives in the
-    ``dsir_selection`` seat).  Summary gains ``dsir_n_docs`` /
-    ``dsir_n_kept``.  Requires ``curated_mode='copy'``.
-
-    ``train_bpe_merges`` appends the tokenizer stage (``operators.bpe``):
-    train a BPE merge table on the final curated corpus (one corpus pass
-    for word frequencies, ``bpe_min_freq`` hapax prune, then merge rounds
-    on the word table alone), persist it as the reusable
-    ``bpe_merges/`` artifact, and annotate every corpus row with its BPE
-    token count (``n_tokens_bpe`` — counts only; token streams are the
-    loader's job via ``encode_documents``).  When ``pack_seqlen`` also
-    runs, packing sizes chunks by BPE tokens instead of whitespace
-    tokens — the tokenizer→budget→pack chain a real LM data pipeline
-    runs.  Summary gains ``bpe_n_merges`` / ``bpe_vocab_words`` /
-    ``bpe_total_tokens``.  Requires ``curated_mode='copy'``.
-
-    ``pack_seqlen`` appends the LM-batcher stage: concat-chop sequence
-    packing (``operators.packing.pack_sequences``) over the final curated
-    passages, sharded by the durable ``bucket`` column (the output-file
-    granularity, so every shard's window is bounded) and ordered by the
-    deterministic (doc_id, passage_idx) key; writes the (passage × chunk)
-    segment map to ``chunk_map/`` — the table a training loader joins to
-    materialise fixed-``pack_seqlen``-token batches.  Summary gains
-    ``pack_n_chunks`` / ``pack_n_segments`` / ``pack_n_tokens``.
-    Requires ``curated_mode='copy'`` (reads the final text).
     """
-    from document_automation_spark.operators.curate import curate_extracted
-    from document_automation_spark.operators.extract import ExtractConfig
+    o = SimpleNamespace(**locals())  # first statement: exactly the keywords
+    from pyspark import StorageLevel
+
+    from document_automation_spark.operators.curate import (
+        STATS_SCHEMA,
+        curate_extracted,
+        curation_tombstones,
+    )
+    from document_automation_spark.operators.extract import (
+        ExtractConfig,
+        documents_from_text,
+        extract_documents,
+    )
     from document_automation_spark.operators.urls import dedup_by_url
-    from document_automation_spark.plans.checkpoint import read_output, run_extraction_job
+    from document_automation_spark.plans.checkpoint import (
+        data_path,
+        read_output,
+        run_extraction_job,
+        write_parquet,
+    )
 
+    summary: dict = {}
+    cache: list = []  # every persisted handle; released in the finally below
+    stages = _corpus_stages(spark, o, summary, cache)
+    _validate(o, stages)
     cfg = cfg or ExtractConfig()
-    robots_blocked = None
-    if robots_path:
-        # robots opt-out gate FIRST: blocked pages must never reach url
-        # dedup / extraction.  The blocked count is one extra pass over the
-        # pruned (url) projection — the html payload is untouched by both
-        # the count and the gate filter (row-local after the host join).
-        # Deliberately NOT an Observation riding the extraction write: a
-        # CollectMetrics node between the gate and the downstream url-dedup
-        # would pin this subplan and block the allowed-filter/projection
-        # pushdown that keeps the payload-light dedup path narrow; the
-        # count pass costs one host join over urls, far below that risk.
-        from document_automation_spark.operators.robots import parse_robots, robots_gate
-
-        rules = parse_robots(spark.read.parquet(robots_path))
-        gated = robots_gate(pages, rules, agent=robots_agent)
-        robots_blocked = (
-            gated.where(~F.col("allowed")).select(F.lit(1)).count()
-        )
-        pages = gated.where(F.col("allowed")).drop("allowed")
-
-    url_cache: list = []
-    if url_dedup:
-        # payload-light path: ranking runs on a narrow projection and only
-        # the (few) superseded re-crawl / double-ingest keys touch payloads
-        # — the html column of clean rows never enters a shuffle
-        # (see operators/urls.py)
-        pages = dedup_by_url(
-            pages, shuffle_payloads=False, cache_registry=url_cache
-        ).drop("canonical_url")
-
-    if curated_mode not in ("copy", "view", "fused"):
-        raise ValueError(
-            f"curated_mode must be 'copy', 'view' or 'fused', got {curated_mode!r}"
-        )
-    if cut_dup_spans and curated_mode != "copy":
-        raise ValueError("cut_dup_spans rewrites text and needs curated_mode='copy'")
-    if dedup_paragraphs_mode is not None:
-        if curated_mode != "copy":
-            raise ValueError(
-                "dedup_paragraphs rewrites text and needs curated_mode='copy'"
-            )
-        _para_mode, _, _para_k = dedup_paragraphs_mode.partition(":")
-        _para_mode, _, _para_flag = _para_mode.partition("+")
-        if (
-            _para_mode not in ("first", "common")
-            or _para_flag not in ("", "norm")
-            # MIN_DOCS must parse NOW — 'common:3+norm' (the natural
-            # mis-ordering of '+norm') would otherwise crash hours later
-            # at the paragraph stage's int() call
-            or (_para_k and not _para_k.isdigit())
-        ):
-            raise ValueError(
-                "dedup_paragraphs_mode must be 'first[+norm]' or "
-                f"'common[+norm][:MIN_DOCS]', got {dedup_paragraphs_mode!r}"
-            )
-    if semantic_dedup_threshold is not None:
-        if not embed:
-            raise ValueError(
-                "semantic_dedup needs the embeddings the --embed stage writes"
-            )
-        if curated_mode != "copy":
-            raise ValueError(
-                "semantic_dedup rewrites the corpus and needs curated_mode='copy'"
-            )
-    if link_graph and from_text:
-        raise ValueError(
-            "link_graph needs html pages (WET text carries no anchors)"
-        )
-    if quality_filter and curated_mode != "copy":
-        raise ValueError("quality_filter re-reads text and needs curated_mode='copy'")
-    if (decontaminate_path or pii_redact) and curated_mode != "copy":
-        raise ValueError(
-            "decontaminate/pii_redact rewrite text and need curated_mode='copy'"
-        )
-    if pack_seqlen is not None and curated_mode != "copy":
-        raise ValueError("pack_seqlen reads the final text and needs curated_mode='copy'")
-    if classifier_good_path and curated_mode != "copy":
-        raise ValueError(
-            "classifier_good_path re-reads the corpus and needs curated_mode='copy'"
-        )
-    if dedup_against_path and curated_mode != "copy":
-        raise ValueError(
-            "dedup_against_path re-reads the corpus and needs curated_mode='copy'"
-        )
-    if dsir_target_path and curated_mode != "copy":
-        raise ValueError(
-            "dsir_target_path re-reads the corpus and needs curated_mode='copy'"
-        )
-    if not 0.0 < dsir_keep_frac <= 1.0:
-        raise ValueError(f"dsir_keep_frac must be in (0, 1], got {dsir_keep_frac}")
-    if train_bpe_merges is not None and curated_mode != "copy":
-        raise ValueError(
-            "train_bpe_merges re-reads the corpus and needs curated_mode='copy'"
-        )
-    if fix_encoding and curated_mode != "copy":
-        raise ValueError(
-            "fix_encoding rewrites text and needs curated_mode='copy'"
-        )
-
-    if from_text:
-        from document_automation_spark.operators.extract import documents_from_text
-
-        docs_fn = documents_from_text
-    else:
-        docs_fn = None  # default: HTML/PDF extraction
-
-    fused_cache: list = []
-    fused_stats: dict = {}
-    if curated_mode == "fused":
-        # FUSED mode: curation (gates + exact dedup) runs BETWEEN the
-        # extraction kernel and the one durable write — the corpus table
-        # IS the curated table, so the composed ingest pays a single
-        # write instead of write-read-write (measured: the curated copy
-        # pass alone is ~5 s of the 200k-page composed job).  Quarantine
-        # rows are RETAINED in the table (filter ``error IS NULL`` to
-        # read the curated view) so the audit trail survives without a
-        # side write.  The dup-loser subquery re-reads the extraction
-        # lineage, so the extracted docs persist for the job's duration —
-        # the memory-footprint trade that makes this the small/medium-
-        # scale mode: at 100 TB prefer 'view' (metadata-only curation) or
-        # 'copy' (write-then-curate, nothing persisted).
-        from pyspark import StorageLevel
-
-        from document_automation_spark.operators.extract import extract_documents
-
-        base_fn = docs_fn or extract_documents
-
-        def fused_docs_fn(pages_, cfg_):
-            docs = base_fn(pages_, cfg_).persist(StorageLevel.MEMORY_AND_DISK)
-            fused_cache.append(docs)
-            curated, collect = curate_extracted(
-                docs,
-                min_chars=min_chars,
-                scripts=scripts,
-                drop_exact_dups=drop_exact_dups,
-                keep_quarantined=True,
-            )
-            fused_stats["collect"] = collect
-            return curated
-
-        docs_fn = fused_docs_fn
-
-    lg_summary: dict = {}
-    if link_graph:
-        # runs on the SAME gated+deduped pages the extractor consumes —
-        # blocked hosts contribute no edges, re-crawls don't double-count;
-        # running BEFORE extraction warms the url-dedup persist both share
-        lg_summary = _link_graph_stage(
-            spark, pages, output_path, n_iters=pagerank_iters
-        )
-
-    # both payload paths run through the SAME durable writer: bucketed
-    # dynamic-overwrite data commit + per-bucket resume manifests + real
-    # counter totals (a crashed --wet run resumes exactly like --warc)
     try:
-        extract_summary = run_extraction_job(
-            spark, pages, output_path, input_fingerprint, cfg, docs_fn=docs_fn
-        )
-    finally:
-        for handle in url_cache:  # the dedup key table served the extract job
-            handle.unpersist()
-        for handle in fused_cache:
-            handle.unpersist()
-    if robots_blocked is not None:
-        extract_summary["robots_blocked"] = robots_blocked
-    extract_summary.update(lg_summary)
+        if robots_path:
+            # ``robots_path`` prepends the robots-exclusion opt-out gate
+            # (``operators.robots``): pages whose host's robots.txt
+            # disallows ``robots_agent`` (Google-REP precedence) are dropped
+            # BEFORE url dedup and extraction — the retroactive opt-out pass
+            # a responsible LLM pipeline runs against a robots snapshot
+            # table ``(host, robots_txt)``.  Summary gains ``robots_blocked``.
+            # The blocked count is one extra pass over the pruned (url)
+            # projection — the html payload is untouched by both the count
+            # and the gate filter (row-local after the host join).
+            # Deliberately NOT an Observation riding the extraction write: a
+            # CollectMetrics node between the gate and the downstream
+            # url-dedup would pin this subplan and block the
+            # allowed-filter/projection pushdown that keeps the
+            # payload-light dedup path narrow; the count pass costs one host
+            # join over urls, far below that risk.
+            from document_automation_spark.operators.robots import parse_robots, robots_gate
 
-    if curated_mode == "fused":
-        stats = fused_stats["collect"]()
-        stats_row = stats.first().asDict()
-        stats.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(output_path, "_curation_stats")
-        )
-        summary = {
-            **extract_summary,
-            **stats_row,
-            "curated_mode": "fused",
-            "curated_path": os.path.join(output_path, "data"),
-        }
-        if embed:
-            curated_docs = read_output(spark, output_path).filter(
-                F.col("error").isNull()
+            rules = parse_robots(spark.read.parquet(robots_path))
+            gated = robots_gate(pages, rules, agent=robots_agent)
+            summary["robots_blocked"] = (
+                gated.where(~F.col("allowed")).select(F.lit(1)).count()
             )
+            pages = gated.where(F.col("allowed")).drop("allowed")
+
+        if url_dedup:
+            # payload-light path: ranking runs on a narrow projection and only
+            # the (few) superseded re-crawl / double-ingest keys touch payloads
+            # — the html column of clean rows never enters a shuffle
+            # (see operators/urls.py)
+            pages = dedup_by_url(
+                pages, shuffle_payloads=False, cache_registry=cache
+            ).drop("canonical_url")
+
+        docs_fn = documents_from_text if from_text else extract_documents
+        curation = dict(
+            min_chars=min_chars, scripts=scripts, drop_exact_dups=drop_exact_dups
+        )
+        fused_stats: list = []
+        if curated_mode == "fused":
+            # FUSED mode: curation (gates + exact dedup) runs BETWEEN the
+            # extraction kernel and the one durable write — the corpus table
+            # IS the curated table, so the composed ingest pays a single
+            # write instead of write-read-write (measured: the curated copy
+            # pass alone is ~5 s of the 200k-page composed job).  Quarantine
+            # rows are RETAINED in the table (filter ``error IS NULL`` to
+            # read the curated view) so the audit trail survives without a
+            # side write.  The dup-loser subquery re-reads the extraction
+            # lineage, so the extracted docs persist for the job's duration —
+            # the memory-footprint trade that makes this the small/medium-
+            # scale mode: at 100 TB prefer 'view' (metadata-only curation) or
+            # 'copy' (write-then-curate, nothing persisted).
+            extract_fn = docs_fn
+
+            def docs_fn(pages_, cfg_):
+                docs = extract_fn(pages_, cfg_).persist(StorageLevel.MEMORY_AND_DISK)
+                cache.append(docs)
+                curated, collect = curate_extracted(
+                    docs, keep_quarantined=True, **curation
+                )
+                fused_stats.append(collect)
+                return curated
+
+        if link_graph:
+            # runs on the SAME gated+deduped pages the extractor consumes —
+            # blocked hosts contribute no edges, re-crawls don't double-count;
+            # running BEFORE extraction warms the url-dedup persist both share
             summary.update(
-                _embed_stage(spark, curated_docs, output_path, embed_dim)
+                _link_graph_stage(spark, pages, output_path, n_iters=pagerank_iters)
             )
-        return summary
 
-    # Stage-appropriate input split size: extraction wants FINE splits
-    # (the per-row kernel is CPU-bound, so callers often set
-    # maxPartitionBytes to a few MB for the pages scan), but every pass
-    # from here on re-reads already-columnar parquet at IO speed — tiny
-    # splits just multiply task/file/zstd-stream overhead.  Measured at
-    # the 200k-page composed ingest: the curated copy pass is 9.9 s under
-    # a 4 MB split vs 4.2-4.6 s at 128/32 MB.  32 MB keeps ~4x more tasks
-    # in flight than the 128 MB default at this corpus size (straggler
-    # headroom) at the same measured cost; the caller's value is restored
-    # after the pipeline (it may be extraction-tuned).
-    with _conf_override(spark, "spark.sql.files.maxPartitionBytes", "32m"):
-        raw_docs = read_output(spark, output_path, with_sha=True)
+        # both payload paths run through the SAME durable writer: bucketed
+        # dynamic-overwrite data commit + per-bucket resume manifests + real
+        # counter totals (a crashed --wet run resumes exactly like --warc)
+        summary.update(
+            run_extraction_job(
+                spark, pages, output_path, input_fingerprint, cfg, docs_fn=docs_fn
+            )
+        )
+        _release(cache)  # the url-dedup keys and fused docs served extraction only
 
         # content_sha completeness: THIS run's writer populates content_sha for
         # every row it writes — but a RESUMED run keeps already-done buckets
@@ -485,476 +306,636 @@ def run_ingest_pipeline(
         # dedup group and silently drop all but one.  Only trust the pruned-scan
         # path when zero buckets were carried over from a previous run; a resumed
         # run falls back to curate's coalesce(sha, re-hash) guard.
-        sha_complete = extract_summary.get("buckets_skipped", 0) == 0
+        sha_complete = summary.get("buckets_skipped", 0) == 0
 
-        if curated_mode == "view":
-            from document_automation_spark.operators.curate import curation_tombstones
+        # Stage-appropriate input split size: extraction wants FINE splits
+        # (the per-row kernel is CPU-bound, so callers often set
+        # maxPartitionBytes to a few MB for the pages scan), but every pass
+        # from here on re-reads already-columnar parquet at IO speed — tiny
+        # splits just multiply task/file/zstd-stream overhead.  Measured at
+        # the 200k-page composed ingest: the curated copy pass is 9.9 s under
+        # a 4 MB split vs 4.2-4.6 s at 128/32 MB.  32 MB keeps ~4x more tasks
+        # in flight than the 128 MB default at this corpus size (straggler
+        # headroom) at the same measured cost; the caller's value is restored
+        # after the pipeline (it may be extraction-tuned).
+        with _conf_override(spark, "spark.sql.files.maxPartitionBytes", "32m"):
+            if curated_mode == "fused":
+                stats_row = fused_stats[0]().first().asDict()
+                summary.update(curated_mode="fused", curated_path=data_path(output_path))
 
-            losers, collect_in_counts = curation_tombstones(
-                raw_docs,
-                min_chars=min_chars,
-                scripts=scripts,
-                drop_exact_dups=drop_exact_dups,
-                sha_is_complete=sha_complete,
-            )
-            losers_path = os.path.join(output_path, "curation_losers")
-            # no separate stats action: the input counters AND the loser
-            # count both ride the loser write as Observations (a re-read +
-            # count() after the write would be one more full job — at small
-            # scale these fixed action costs dominate the composed wall)
-            obs_losers = Observation("loser_count")
-            losers.observe(
-                obs_losers, F.count(F.lit(1)).alias("n_losers")
-            ).write.mode("overwrite").parquet(losers_path)
-            n_losers = int(obs_losers.get["n_losers"] or 0)
-            in_counts = collect_in_counts()
-            rows_out = (
-                in_counts["rows_in"]
-                - in_counts["quarantined"]
-                - in_counts["gated"]
-                - n_losers
-            )
-            stats_row = {
-                **in_counts,
-                "deduped": n_losers,
-                "rows_out": rows_out,
-            }
-            # persist the gate config so read_curated applies the SAME policy
-            spark.createDataFrame(
-                [(min_chars, ",".join(scripts) if scripts else None)],
-                "min_chars int, scripts string",
-            ).repartition(1).write.mode("overwrite").json(
-                os.path.join(output_path, "_curation_config")
-            )
-            spark.createDataFrame(
-                [tuple(stats_row[k] for k in
-                       ("rows_in", "quarantined", "gated", "deduped", "rows_out"))],
-                "rows_in long, quarantined long, gated long, deduped long, rows_out long",
-            ).repartition(1).write.mode("overwrite").parquet(
+                def read_docs() -> DataFrame:
+                    return read_output(spark, output_path).filter(F.col("error").isNull())
+
+            elif curated_mode == "view":
+                losers, collect_in_counts = curation_tombstones(
+                    read_output(spark, output_path, with_sha=True),
+                    sha_is_complete=sha_complete,
+                    **curation,
+                )
+                losers_path = os.path.join(output_path, "curation_losers")
+                # no separate stats action: the input counters AND the loser
+                # count both ride the loser write as Observations (a re-read +
+                # count() after the write would be one more full job — at small
+                # scale these fixed action costs dominate the composed wall)
+                obs_losers = Observation("loser_count")
+                losers.observe(
+                    obs_losers, F.count(F.lit(1)).alias("n_losers")
+                ).write.mode("overwrite").parquet(losers_path)
+                n_losers = int(obs_losers.get["n_losers"] or 0)
+                stats_row = collect_in_counts()
+                stats_row["deduped"] = n_losers
+                stats_row["rows_out"] = (
+                    stats_row["rows_in"] - stats_row["quarantined"]
+                    - stats_row["gated"] - n_losers
+                )
+                # persist the gate config so read_curated applies the SAME policy
+                spark.createDataFrame(
+                    [(min_chars, ",".join(scripts) if scripts else None)],
+                    "min_chars int, scripts string",
+                ).repartition(1).write.mode("overwrite").json(
+                    os.path.join(output_path, "_curation_config")
+                )
+                summary.update(curated_mode="view", losers_path=losers_path)
+
+                def read_docs() -> DataFrame:
+                    return read_curated(spark, output_path)
+
+            else:
+                curated, collect_stats = curate_extracted(
+                    read_output(spark, output_path, with_sha=True),
+                    sha_is_complete=sha_complete,
+                    **curation,
+                )
+                # ONE action runs the whole curation: stage counters ride the
+                # write as CollectMetrics observations (read afterwards)
+                summary["curated_path"] = os.path.join(output_path, "curated")
+                write_parquet(curated, summary["curated_path"])
+                stats_row = collect_stats().first().asDict()
+
+                def read_docs() -> DataFrame:
+                    return spark.read.parquet(summary["curated_path"])
+
+            spark.createDataFrame([stats_row], STATS_SCHEMA).repartition(1).write.mode(
+                "overwrite"
+            ).parquet(
                 os.path.join(output_path, "_curation_stats")
             )
-            summary = {
-                **extract_summary,
-                **stats_row,
-                "curated_mode": "view",
-                "losers_path": losers_path,
-            }
-            if embed:
-                summary.update(
-                    _embed_stage(spark, read_curated(spark, output_path), output_path, embed_dim)
-                )
-            return summary
+            summary.update(stats_row)
+            _run_stages(stages, read_docs, stats_row["rows_out"], output_path, summary, cache)
+    finally:
+        _release(cache)
+    return summary
 
-        curated, collect_stats = curate_extracted(
-            raw_docs,
-            min_chars=min_chars,
-            scripts=scripts,
-            drop_exact_dups=drop_exact_dups,
-            sha_is_complete=sha_complete,
-        )
-        curated_path = os.path.join(output_path, "curated")
-        # ONE action runs the whole curation: stage counters ride the write as
-        # CollectMetrics observations (collect_stats() reads them afterwards).
-        # zstd-1 writer options match the durable writer (see plans/checkpoint)
+
+def _validate(o: SimpleNamespace, stages: list[Stage]) -> None:
+    """Every cross-stage rule in one table, checked before any Spark job
+    runs — a rejected config must cost nothing and pin nothing."""
+    rules = [
         (
-            curated.write.mode("overwrite")
-            .option("compression", "zstd")
-            .option("parquet.compression.codec.zstd.level", "1")
-            .parquet(curated_path)
+            o.curated_mode not in ("copy", "view", "fused"),
+            f"curated_mode must be 'copy', 'view' or 'fused', got {o.curated_mode!r}",
+        ),
+        (
+            o.semantic_dedup_threshold is not None and not o.embed,
+            "semantic_dedup needs the embeddings the --embed stage writes",
+        ),
+        (
+            o.link_graph and o.from_text,
+            "link_graph needs html pages (WET text carries no anchors)",
+        ),
+        (
+            o.dedup_paragraphs_mode is not None
+            and _paragraph_mode(o.dedup_paragraphs_mode) is None,
+            "dedup_paragraphs_mode must be 'first[+norm]' or "
+            f"'common[+norm][:MIN_DOCS]', got {o.dedup_paragraphs_mode!r}",
+        ),
+        (
+            not 0.0 < o.dsir_keep_frac <= 1.0,
+            f"dsir_keep_frac must be in (0, 1], got {o.dsir_keep_frac}",
+        ),
+    ]
+    # embed reads the curated VIEW every mode offers; every other corpus
+    # stage reads or rewrites the physical curated table
+    rules += [
+        (
+            s.enabled and s.name != "embed" and o.curated_mode != "copy",
+            f"{s.name} reads the curated table and needs curated_mode='copy'",
         )
-        stats = collect_stats()
-        stats_row = stats.first().asDict()
-        stats.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(output_path, "_curation_stats")
+        for s in stages
+    ]
+    for broken, message in rules:
+        if broken:
+            raise ValueError(message)
+
+
+def _run_stages(
+    stages: list[Stage],
+    read_docs: Callable[[], DataFrame],
+    rows: int,
+    output_path: str,
+    summary: dict,
+    cache: list,
+) -> None:
+    """The one corpus-stage runner: every enabled stage reads the current
+    curated table (``content`` as ``text``), and each table it writes —
+    zstd-1, with its row count riding the write as an Observation —
+    becomes the current curated table for the next stage."""
+    from document_automation_spark.plans.checkpoint import write_parquet
+
+    def write(df: DataFrame, table: str) -> int:
+        nonlocal rows
+        obs = Observation()
+        path = os.path.join(output_path, table)
+        write_parquet(
+            df.withColumnRenamed("text", "content").observe(
+                obs, F.count(F.lit(1)).alias("rows")
+            ),
+            path,
         )
-        summary = {**extract_summary, **stats_row, "curated_path": curated_path}
+        rows = int(obs.get["rows"])
+        summary["curated_path"] = path
+        return rows
 
-        if fix_encoding:
-            # ftfy-style UTF-8-as-cp1252 mojibake repair
-            # (operators/encoding.py) — runs BEFORE span/paragraph dedup
-            # so repaired variants of the same text dedup together, and
-            # before every scoring stage so LM/quality/classifier never
-            # see corrupted bytes.  Map-only read→write; the repaired-row
-            # counter rides the write as an Observation.
-            from document_automation_spark.operators.encoding import repair_mojibake
+    for stage in stages:
+        if stage.enabled:
+            docs = read_docs().withColumnRenamed("content", "text")
+            summary.update(stage.apply(docs, rows, write))
+            _release(cache)
 
-            corpus = spark.read.parquet(summary["curated_path"])
+
+def _corpus_stages(
+    spark: SparkSession, o: SimpleNamespace, summary: dict, cache: list
+) -> list[Stage]:
+    """The corpus stages after curation, in runner order.  Building the
+    table runs nothing; each stage's work happens in its ``apply``."""
+    from document_automation_spark.plans.checkpoint import write_parquet
+
+    out = o.output_path
+
+    # ``fix_encoding=True``: the encoding-repair stage
+    # (``operators.encoding.repair_mojibake``): ftfy-style
+    # UTF-8-as-cp1252 mojibake repair as one single-pass JVM expression
+    # over the curated text.  Runs FIRST among the corpus stages — before
+    # cross-snapshot dedup (a re-crawled page stored corrupted must match
+    # its repaired copy in the prior corpus, so content identity is made
+    # canonical before any comparison), before span/paragraph dedup
+    # (repaired variants of the same text must dedup together) and before
+    # every scoring stage (the LM / quality / classifier legs never see
+    # corrupted bytes); identities re-derived as in every rewriting stage,
+    # and (when ``drop_exact_dups``) the exact keeper rule is re-applied on
+    # the repaired shas — curation's dedup keyed on UNREPAIRED content, so
+    # a clean copy and a corrupted copy of the same text in one snapshot
+    # both survived it and collide only here.  Summary gains
+    # ``mojibake_repaired`` (surviving repaired rows — a repaired row that
+    # then loses the re-applied dedup counts in) + ``mojibake_dedup_losers``.
+    def fix_encoding(docs, rows_in, write):
+        from document_automation_spark.operators.encoding import repair_mojibake
+
+        # passes=2 also heals generation-2 mojibake ("Ã¢â‚¬â„¢" — a
+        # corrupted page re-crawled through another bad proxy); a pass
+        # over clean text is a no-op, so this is free for the common case
+        repaired = _rederive_identities(
+            repair_mojibake(docs, text_col="text", passes=2), text_col="text"
+        )
+        if o.drop_exact_dups:
+            # re-apply curation's keeper rule (min (url, passage_idx) per
+            # content key) on the repaired shas.  Curate's byte-identical
+            # (url, passage_idx) collision guard is intentionally omitted:
+            # post-curation rows have unique (url, passage_idx) by
+            # construction (extraction emits one row per passage), so two
+            # rows can never tie on the min key here.  A future caller
+            # feeding NON-unique keys through this stage must add the guard
+            # back.
+            keep = repaired.groupBy("content_sha").agg(
+                F.min(F.struct("url", "passage_idx")).alias("_keep")
+            )
             repaired = (
-                repair_mojibake(
-                    corpus.withColumnRenamed("content", "text"),
-                    text_col="text",
-                    # passes=2 also heals generation-2 mojibake
-                    # ("Ã¢â‚¬â„¢" — a corrupted page re-crawled through
-                    # another bad proxy); a pass over clean text is a
-                    # no-op, so this is free for the common case
-                    passes=2,
+                repaired.join(keep, "content_sha")
+                .filter(
+                    (F.col("url") == F.col("_keep.url"))
+                    & (F.col("passage_idx") == F.col("_keep.passage_idx"))
                 )
-                .withColumnRenamed("text", "content")
+                .drop("_keep")
             )
-            # re-derive both content-derived identities over the
-            # (possibly) rewritten text — same contract as span
-            # surgery / PII redaction
-            repaired = _rederive_identities(repaired)
-            if drop_exact_dups:
-                # curation's exact dedup keyed on the UNREPAIRED content,
-                # so a clean copy and a corrupted copy of the same text in
-                # ONE snapshot both survived it and became byte-identical
-                # here — re-apply the same keeper rule (min (url,
-                # passage_idx) per content key) on the repaired shas.
-                # Curate's byte-identical (url, passage_idx) collision
-                # guard is intentionally omitted: post-curation rows have
-                # unique (url, passage_idx) by construction (extraction
-                # emits one row per passage), so two rows can never tie on
-                # the min key here.  A future caller feeding NON-unique
-                # keys through this stage must add the guard back.
-                keep = repaired.groupBy("content_sha").agg(
-                    F.min(F.struct("url", "passage_idx")).alias("_keep")
-                )
-                repaired = (
-                    repaired.join(keep, "content_sha")
-                    .filter(
-                        (F.col("url") == F.col("_keep.url"))
-                        & (F.col("passage_idx") == F.col("_keep.passage_idx"))
-                    )
-                    .drop("_keep")
-                )
-            obs_enc = Observation("fix_encoding")
-            enc_path = os.path.join(output_path, "curated_encfix")
-            (
-                repaired.observe(
-                    obs_enc,
-                    F.sum(F.col("was_mojibake").cast("long")).alias("n_repaired"),
-                    F.count(F.lit(1)).alias("n_rows"),
-                )
-                .drop("was_mojibake")
-                .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
-                .parquet(enc_path)
-            )
-            # Counter contract: mojibake_repaired counts SURVIVING repaired
-            # rows (the Observation rides the post-dedup write), so a
-            # repaired row that then loses the re-applied exact dedup — the
-            # corrupted-copy-collides-with-clean-copy case — is counted in
-            # mojibake_dedup_losers, not here.  Observing pre-dedup instead
-            # would pin a CollectMetrics node into a plan the keeper-rule
-            # self-join reads twice; the losers counter already carries the
-            # collapsed rows, so the pair (repaired, dedup_losers) is
-            # complete.
-            summary["mojibake_repaired"] = int(obs_enc.get["n_repaired"] or 0)
-            summary["mojibake_dedup_losers"] = int(
-                (stats_row.get("rows_out") or 0) - (obs_enc.get["n_rows"] or 0)
-            )
-            summary["curated_path"] = enc_path
+        # Counter contract: mojibake_repaired counts SURVIVING repaired rows
+        # (the Observation rides the post-dedup write), so a repaired row
+        # that then loses the re-applied exact dedup is counted in
+        # mojibake_dedup_losers, not here.  Observing pre-dedup instead
+        # would pin a CollectMetrics node into a plan the keeper-rule
+        # self-join reads twice.
+        obs = Observation("fix_encoding")
+        rows_out = write(
+            repaired.observe(
+                obs, F.sum(F.col("was_mojibake").cast("long")).alias("n")
+            ).drop("was_mojibake"),
+            "curated_encfix",
+        )
+        return {
+            "mojibake_repaired": _counters(obs)["n"],
+            "mojibake_dedup_losers": rows_in - rows_out,
+        }
 
-        if dedup_against_path:
-            from document_automation_spark.operators.curate import (
-                dedup_against_corpus,
-            )
+    # ``dedup_against_path``: cross-snapshot incremental dedup
+    # (``operators.curate.dedup_against_corpus``): drop every curated row
+    # whose content already exists in the previously-published corpus at
+    # that path — the Common-Crawl monthly-snapshot recipe (most of each
+    # snapshot is carry-over; dropping it here spares every later stage).
+    # ``trust_existing_sha=True`` prunes the existing-corpus scan to its
+    # ``content_sha`` column alone (pass it only for corpora written by
+    # this engine's durable writer).  Summary gains ``xsnap_rows_in`` (the
+    # rows that entered this stage) / ``xsnap_rows_kept``.  Runs right
+    # after curation (only encoding repair precedes it, to canonicalize
+    # content identity first — the comparison must see REPAIRED content
+    # or every corrupted carry-over row leaks back in as a "fresh"
+    # duplicate) so carried-over rows never reach span surgery / quality /
+    # hygiene / classifier.
+    def xsnap(docs, rows_in, write):
+        from document_automation_spark.operators.curate import dedup_against_corpus
 
-            existing = spark.read.parquet(dedup_against_path)
-            fresh = dedup_against_corpus(
-                # summary["curated_path"], NOT the raw curated_path local:
-                # when fix_encoding ran, the comparison must see REPAIRED
-                # content or every corrupted carry-over row leaks back in
-                # as a "fresh" duplicate (pinned by the ordering test)
-                spark.read.parquet(summary["curated_path"]),
-                existing,
-                # the curated table was just written, but a RESUMED
-                # extraction can carry pre-content_sha buckets through
-                # untouched (buckets_skipped > 0) — null shas would
-                # silently bypass the anti-join, so only trust the pruned
-                # path when this run materialized every bucket itself
-                # (round-4 advisory) OR when the encoding-repair stage
-                # just re-derived every row's sha from scratch
-                new_sha_complete=sha_complete or fix_encoding,
-                existing_sha_complete=trust_existing_sha,
-            )
-            obs_x = Observation("xsnap")
-            xsnap_path = os.path.join(output_path, "curated_incremental")
-            (
-                fresh.observe(obs_x, F.count(F.lit(1)).alias("rows_kept"))
-                .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
-                .parquet(xsnap_path)
-            )
-            summary["xsnap_rows_in"] = int(stats_row.get("rows_out") or 0)
-            summary["xsnap_rows_kept"] = int(obs_x.get["rows_kept"] or 0)
-            summary["curated_path"] = xsnap_path
+        fresh = dedup_against_corpus(
+            # the dedup key's re-hash fallback reads ``content``
+            docs.withColumnRenamed("text", "content"),
+            spark.read.parquet(o.dedup_against_path),
+            # a RESUMED extraction can carry pre-content_sha buckets
+            # through untouched (buckets_skipped > 0) — null shas would
+            # silently bypass the anti-join, so only trust the pruned path
+            # when this run materialized every bucket itself OR when the
+            # encoding-repair stage just re-derived every row's sha
+            new_sha_complete=summary.get("buckets_skipped", 0) == 0 or o.fix_encoding,
+            existing_sha_complete=o.trust_existing_sha,
+        )
+        rows_kept = write(fresh, "curated_incremental")
+        return {"xsnap_rows_in": rows_in, "xsnap_rows_kept": rows_kept}
 
-        if cut_dup_spans:
-            from document_automation_spark.operators.dedup import (
-                cut_spans,
-                duplicate_spans,
-            )
+    # ``cut_dup_spans=True``: exact-substring span surgery (Lee et al.
+    # 2022, ``operators.dedup.duplicate_spans``/``cut_spans``): every
+    # ≥``span_k``-char window occurring in ≥2 curated passages is cut from
+    # ALL of them (the policy of Lee et al.'s released ExactSubstr tool —
+    # cross-document repeated substrings at this length are boilerplate).
+    # One extra corpus read/write (the gram explode is the operator's
+    # inherent cost); re-derives BOTH content-derived identities
+    # (``doc_id``, ``content_sha``) for surgered rows.  Summary gains
+    # ``cut_chars`` / ``spanned_passages``.
+    def span_cut(docs, rows_in, write):
+        from document_automation_spark.operators.dedup import cut_spans, duplicate_spans
 
-            corpus = spark.read.parquet(summary["curated_path"])
-            as_docs = corpus.withColumnRenamed("content", "text")
-            span_cache: list = []
-            spans = duplicate_spans(
-                as_docs, k=span_k, min_docs=2, cache_registry=span_cache
+        spans = duplicate_spans(docs, k=o.span_k, min_docs=2, cache_registry=cache)
+        obs = Observation("span_cut")
+        surgered = (
+            cut_spans(docs, spans)
+            .observe(
+                obs,
+                F.sum("n_cut_chars").alias("cut_chars"),
+                F.sum((F.col("n_cut_chars") > 0).cast("long")).alias("spanned_passages"),
             )
-            obs_cut = Observation("span_cut")
-            surgered = (
-                cut_spans(as_docs, spans)
-                .observe(
-                    obs_cut,
-                    F.sum("n_cut_chars").alias("cut_chars"),
-                    F.sum((F.col("n_cut_chars") > 0).cast("long")).alias(
-                        "spanned_passages"
-                    ),
-                )
-                .withColumnRenamed("text", "content")
-                .drop("n_cut_chars")
-            )
-            # surgery rewrote text → re-derive both content-derived ids
-            surgered = _rederive_identities(surgered)
-            cut_path = os.path.join(output_path, "curated_cut")
-            try:
-                (
-                    surgered.write.mode("overwrite")
-                    .option("compression", "zstd")
-                    .option("parquet.compression.codec.zstd.level", "1")
-                    .parquet(cut_path)
-                )
-            finally:
-                for handle in span_cache:  # targeted: never clearCache() the session
-                    handle.unpersist()
-            summary["cut_chars"] = int(obs_cut.get["cut_chars"] or 0)
-            summary["spanned_passages"] = int(obs_cut.get["spanned_passages"] or 0)
-            summary["curated_path"] = cut_path
+            .drop("n_cut_chars")
+        )
+        write(_rederive_identities(surgered, text_col="text"), "curated_cut")
+        return _counters(obs)
 
-        if dedup_paragraphs_mode is not None:
-            # CCNet-style cross-document paragraph dedup over the curated
-            # passages: 'first' keeps the globally-first copy of every
-            # duplicated paragraph, 'common[:K]' cuts paragraphs shared by
-            # >= K distinct passages everywhere (template boilerplate).
-            from document_automation_spark.operators.dedup import dedup_paragraphs
+    # ``dedup_paragraphs_mode``: CCNet-style cross-document PARAGRAPH
+    # dedup (``operators.dedup.dedup_paragraphs``) over the curated
+    # passages: ``'first'`` keeps the globally-first copy of every
+    # duplicated paragraph, ``'common[:MIN_DOCS]'`` cuts paragraphs shared
+    # by ≥ MIN_DOCS distinct passages everywhere (template boilerplate —
+    # cookie banners, navigation stubs); a ``'+norm'`` suffix on either
+    # mode keys on the CCNet hash normalization (case / accents / digits /
+    # unicode punctuation folded) so boilerplate VARIANTS dedup together.
+    # Passages emptied by the cut are dropped; identities re-derived as in
+    # the span stage.  Summary gains ``dropped_paragraphs`` /
+    # ``para_deduped_passages`` / ``para_emptied_passages``.
+    def paragraph_dedup(docs, rows_in, write):
+        from document_automation_spark.operators.dedup import dedup_paragraphs
 
-            mode, _, k_str = dedup_paragraphs_mode.partition(":")
-            mode, _, flag = mode.partition("+")  # '+norm' = CCNet key norm
-            corpus = spark.read.parquet(summary["curated_path"])
-            as_docs = corpus.withColumnRenamed("content", "text").withColumn(
-                # passages share doc_id — the dedup row key must be unique
-                # (and deterministically ordered for 'first' mode)
-                "_row_key",
-                F.concat_ws(":", "doc_id", "passage_idx"),
+        mode, normalize, min_docs = _paragraph_mode(o.dedup_paragraphs_mode)
+        out = dedup_paragraphs(
+            # passages share doc_id — the dedup row key must be unique
+            # (and deterministically ordered for 'first' mode)
+            docs.withColumn("_row_key", F.concat_ws(":", "doc_id", "passage_idx")),
+            mode=mode,
+            min_docs=min_docs,
+            id_col="_row_key",
+            normalize=normalize,
+        )
+        obs = Observation("para_dedup")
+        surgered = (
+            out.observe(
+                obs,
+                F.sum("n_dropped_paragraphs").alias("dropped_paragraphs"),
+                F.sum((F.col("n_dropped_paragraphs") > 0).cast("long")).alias(
+                    "para_deduped_passages"
+                ),
+                F.sum((F.trim("text") == "").cast("long")).alias("para_emptied_passages"),
             )
-            out = dedup_paragraphs(
-                as_docs,
-                mode=mode,
-                min_docs=int(k_str or 2),
-                id_col="_row_key",
-                normalize=flag == "norm",
-            )
-            obs_para = Observation("para_dedup")
-            surgered = (
-                out.observe(
-                    obs_para,
-                    F.sum("n_dropped_paragraphs").alias("dropped_paragraphs"),
-                    F.sum((F.col("n_dropped_paragraphs") > 0).cast("long")).alias(
-                        "para_deduped_passages"
-                    ),
-                    F.sum((F.trim("text") == "").cast("long")).alias(
-                        "para_emptied_passages"
-                    ),
-                )
-                # a passage whose every paragraph was boilerplate is gone
-                .where(F.trim("text") != "")
-                .drop("_row_key", "n_dropped_paragraphs")
-                .withColumnRenamed("text", "content")
-            )
-            # text rewritten → re-derive both content-derived identities
-            surgered = _rederive_identities(surgered)
-            para_path = os.path.join(output_path, "curated_paradedup")
-            (
-                surgered.write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
-                .parquet(para_path)
-            )
-            summary["dropped_paragraphs"] = int(
-                obs_para.get["dropped_paragraphs"] or 0
-            )
-            summary["para_deduped_passages"] = int(
-                obs_para.get["para_deduped_passages"] or 0
-            )
-            summary["para_emptied_passages"] = int(
-                obs_para.get["para_emptied_passages"] or 0
-            )
-            summary["curated_path"] = para_path
+            # a passage whose every paragraph was boilerplate is gone
+            .where(F.trim("text") != "")
+            .drop("_row_key", "n_dropped_paragraphs")
+        )
+        write(_rederive_identities(surgered, text_col="text"), "curated_paradedup")
+        return _counters(obs)
 
-        if quality_filter:
-            from document_automation_spark.operators.webtext_quality import (
-                QualityRules,
-                filter_by_quality,
-            )
+    # ``quality_filter=True``: the Gopher/C4 repetition gate
+    # (``operators.webtext_quality.filter_by_quality``; thresholds from
+    # ``quality_rules``, default the published Gopher bounds) — a
+    # zero-shuffle expression gate whose per-rule drop counters ride the
+    # write as Observation metrics (summary gains ``quality_n_docs`` /
+    # ``quality_n_kept`` / ``quality_drop_<rule>``).
+    def quality(docs, rows_in, write):
+        from document_automation_spark.operators.webtext_quality import (
+            QualityRules,
+            filter_by_quality,
+        )
 
-            corpus = spark.read.parquet(summary["curated_path"])
-            kept, obs_q = filter_by_quality(
-                corpus.withColumnRenamed("content", "text"),
-                rules=quality_rules or QualityRules(),
-            )
-            quality_path = os.path.join(output_path, "curated_quality")
-            (
-                kept.withColumnRenamed("text", "content")
-                .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
-                .parquet(quality_path)
-            )
-            summary.update(
-                {f"quality_{k}": int(v or 0) for k, v in obs_q.get.items()}
-            )
-            summary["curated_path"] = quality_path
+        kept, obs = filter_by_quality(docs, rules=o.quality_rules or QualityRules())
+        write(kept, "curated_quality")
+        return _counters(obs, "quality_")
 
-        if decontaminate_path or pii_redact:
-            # corpus-hygiene stage: benchmark decontamination (drop) then
-            # PII redaction (rewrite) composed into ONE plan + ONE write —
-            # both stages' counters ride that write as Observations.
-            from document_automation_spark.operators.decontaminate import decontaminate
-            from document_automation_spark.operators.pii import redact_pii
+    # ``decontaminate_path`` / ``pii_redact``: the corpus-HYGIENE stage:
+    # GPT-3-style n-gram benchmark decontamination (drop every doc sharing
+    # a ``decontaminate_ngram``-gram with the eval-set parquet at
+    # ``decontaminate_path`` — ``operators.decontaminate``) and/or PII
+    # redaction (``operators.pii.redact_pii``; content-derived identities
+    # re-derived after the rewrite).  Both compose into ONE plan + ONE
+    # write; counters land in the summary as ``decontam_*`` / ``pii_*``.
+    def hygiene(docs, rows_in, write):
+        from document_automation_spark.operators.decontaminate import decontaminate
+        from document_automation_spark.operators.pii import redact_pii
 
-            corpus = spark.read.parquet(summary["curated_path"]).withColumnRenamed(
-                "content", "text"
+        obs_d = obs_p = None
+        if o.decontaminate_path:
+            bench = spark.read.parquet(o.decontaminate_path).select("text")
+            docs, obs_d = decontaminate(
+                docs, bench, n=o.decontaminate_ngram, doc_id_col="doc_id"
             )
-            obs_d = obs_p = None
-            if decontaminate_path:
-                bench = spark.read.parquet(decontaminate_path).select("text")
-                corpus, obs_d = decontaminate(
-                    corpus, bench, n=decontaminate_ngram, doc_id_col="doc_id"
-                )
-            if pii_redact:
-                corpus, obs_p = redact_pii(corpus, count_cols=False)
-                # redaction rewrites text → re-derive both identities
-                corpus = _rederive_identities(corpus, text_col="text")
-            hygiene_path = os.path.join(output_path, "curated_hygiene")
-            (
-                corpus.withColumnRenamed("text", "content")
-                .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
-                .parquet(hygiene_path)
-            )
-            if obs_d is not None:
-                summary.update(
-                    {f"decontam_{k}": int(v or 0) for k, v in obs_d.get.items()}
-                )
-            if obs_p is not None:
-                summary.update({f"pii_{k}": int(v or 0) for k, v in obs_p.get.items()})
-            summary["curated_path"] = hygiene_path
+        if o.pii_redact:
+            docs, obs_p = redact_pii(docs, count_cols=False)
+            docs = _rederive_identities(docs, text_col="text")
+        write(docs, "curated_hygiene")
+        return {**_counters(obs_d, "decontam_"), **_counters(obs_p, "pii_")}
 
-        if classifier_good_path:
-            summary.update(
-                _classifier_stage(
-                    spark,
-                    spark.read.parquet(summary["curated_path"]),
-                    output_path,
-                    classifier_good_path,
-                    classifier_alpha,
-                )
-            )
-            summary["curated_path"] = summary["classifier_path"]
+    # ``classifier_good_path``: the GPT-3-style learned quality filter
+    # (``operators.quality_classifier``): train reference-vs-crawl logistic
+    # regression (positives = the trusted parquet's ``text`` column,
+    # negatives = a deterministic ~2×-positive hash-sample of the corpus
+    # itself — raw crawl IS the negative class), score every curated doc in
+    # the same map pass as the write (map-only MLlib transform, no
+    # re-join), keep iff ``pareto(classifier_alpha) > 1 - score``
+    # (importance sampling, not a hard cut).  Summary gains
+    # ``classifier_n_docs`` / ``classifier_n_kept``; the filtered table
+    # carries a ``quality_score`` column.
+    def classifier(docs, rows_in, write):
+        from pyspark.ml import PipelineModel
 
-        if dsir_target_path:
-            summary.update(
-                _dsir_stage(
-                    spark,
-                    spark.read.parquet(summary["curated_path"]),
-                    output_path,
-                    dsir_target_path,
-                    dsir_keep_frac,
-                )
-            )
-            summary["curated_path"] = summary["dsir_path"]
+        from document_automation_spark.operators.mixing import uniform_hash_col
+        from document_automation_spark.operators.quality_classifier import (
+            pareto_importance_filter,
+            score_quality,
+            train_quality_classifier,
+        )
 
-        if train_bpe_merges is not None:
-            summary.update(
-                _bpe_stage(
-                    spark,
-                    spark.read.parquet(summary["curated_path"]),
-                    output_path,
-                    train_bpe_merges,
-                    bpe_min_freq,
-                )
-            )
-            summary["curated_path"] = summary["bpe_path"]
+        pos = spark.read.parquet(o.classifier_good_path).select("text")
+        n_pos = pos.count()
+        n_docs = docs.count()
+        rate = min(1.0, (2.0 * n_pos) / max(n_docs, 1))
+        neg = docs.select("doc_id", "text").where(uniform_hash_col("doc_id") < rate)
+        model = train_quality_classifier(pos, neg.select("text"))
+        # persist the model beside the corpus (the reusable artifact) AND
+        # reload it — belt-and-braces against the training-summary
+        # serialization hazard (train_quality_classifier now strips the
+        # summary at fit time, and load() never carries one)
+        model_path = os.path.join(out, "quality_classifier_model")
+        model.write().overwrite().save(model_path)
+        model = PipelineModel.load(model_path)
+        scored = score_quality(docs, model, keep_all=True)
+        n_kept = write(
+            pareto_importance_filter(scored, alpha=o.classifier_alpha),
+            "curated_classifier",
+        )
+        return {
+            "classifier_path": summary["curated_path"],
+            "classifier_n_docs": int(n_docs),
+            "classifier_n_kept": n_kept,
+            "classifier_n_pos": int(n_pos),
+        }
 
-        if embed:
-            summary.update(
-                _embed_stage(
-                    spark, spark.read.parquet(summary["curated_path"]), output_path, embed_dim
-                )
-            )
+    # ``dsir_target_path``: DSIR importance resampling (``operators.dsir``):
+    # fit hashed-ngram bucket models to the trusted target parquet vs the
+    # curated corpus itself, score every doc by the log-ratio sum, and
+    # Gumbel-top-k the best ``dsir_keep_frac`` of the corpus — distribution
+    # matching where the classifier stage is quality thresholding; they
+    # compose (classifier first, then DSIR).  Uses the xxhash64 fast path
+    # (the oracle-parity md5 leg lives in the ``dsir_selection`` seat).
+    # Summary gains ``dsir_n_docs`` / ``dsir_n_kept``.
+    def dsir(docs, rows_in, write):
+        from document_automation_spark.operators.dsir import (
+            dsir_resample,
+            dsir_scores,
+            train_dsir_weights,
+        )
 
-        if semantic_dedup_threshold is not None:
-            # SemDeDup over the embeddings the --embed stage just wrote:
-            # cluster, pair within cluster, keep the farthest-from-centroid
-            # member of every semantic group; drop the loser PASSAGES from
-            # both the corpus and the embeddings table (doc_id is a
-            # content-derived per-passage key, so the anti-join is row-exact)
-            from document_automation_spark.operators.similarity import semantic_dedup
+        target = spark.read.parquet(o.dsir_target_path).select("text")
+        weights = train_dsir_weights(target, docs.select("text"), hash_impl="xxhash64")
+        # selection is DOC-level: passages of one doc share its doc_id, so
+        # dsir_scores' groupBy already concatenates a doc's grams; count docs
+        # off the scored table (one row per doc) rather than corpus rows —
+        # k derives from that exact count, which the scoring pass needs anyway
+        scored = dsir_scores(
+            docs.select("doc_id", "text"), weights, hash_impl="xxhash64"
+        ).localCheckpoint()
+        n_docs = scored.count()
+        k = max(1, int(n_docs * o.dsir_keep_frac))
+        kept_ids = dsir_resample(scored, k=k).select("doc_id", "dsir_score")
+        write(docs.join(kept_ids, "doc_id"), "curated_dsir")
+        return {
+            "dsir_path": summary["curated_path"],
+            "dsir_n_docs": int(n_docs),
+            "dsir_n_kept": int(min(k, n_docs)),
+        }
 
-            emb = spark.read.parquet(summary["embeddings_path"]).withColumnRenamed(
-                "vector_id", "vec_id"
-            )
-            sem_cache: list = []
-            flags = semantic_dedup(
-                emb,
-                n_clusters=semantic_clusters,
-                threshold=semantic_dedup_threshold,
-                cache_registry=sem_cache,
-            )
-            losers = flags.where(~F.col("kept")).select("doc_id")
-            corpus = spark.read.parquet(summary["curated_path"])
-            sem_path = os.path.join(output_path, "curated_semdedup")
-            obs_sem = Observation("semantic_dedup")
-            (
-                corpus.join(losers, "doc_id", "left_anti")
-                .observe(obs_sem, F.count(F.lit(1)).alias("kept_rows"))
-                .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
-                .parquet(sem_path)
-            )
-            kept_rows = int(obs_sem.get["kept_rows"] or 0)
-            # embeddings table follows the corpus (the ANN/serving input
-            # must not serve dropped passages); original dense vector_ids
-            # are kept — gaps mark dedup losers, order is untouched
-            emb_sem_path = os.path.join(output_path, "embeddings_semdedup")
-            try:
-                (
-                    flags.where(F.col("kept"))
-                    .withColumnRenamed("vec_id", "vector_id")
-                    .drop("bucket", "centroid_sim", "kept")
-                    .write.mode("overwrite")
-                    .option("compression", "zstd")
-                    .option("parquet.compression.codec.zstd.level", "1")
-                    .parquet(emb_sem_path)
-                )
-            finally:
-                for handle in sem_cache:  # targeted: never clearCache()
-                    handle.unpersist()
-            summary["semdedup_dropped"] = summary["n_vectors"] - kept_rows
-            summary["n_vectors"] = kept_rows
-            summary["curated_path"] = sem_path
-            summary["embeddings_path"] = emb_sem_path
+    # ``train_bpe_merges``: the tokenizer stage (``operators.bpe``): train a
+    # BPE merge table on the final curated corpus (one corpus pass for word
+    # frequencies, ``bpe_min_freq`` hapax prune, then merge rounds on the
+    # word table alone), persist it as the reusable ``bpe_merges/``
+    # artifact (rank order IS the tokenizer), and annotate every corpus row
+    # with its BPE token count (``n_tokens_bpe`` — counts only; token
+    # streams are the loader's job via ``encode_documents``).  When
+    # ``pack_seqlen`` also runs, packing sizes chunks by BPE tokens instead
+    # of whitespace tokens — the tokenizer→budget→pack chain a real LM data
+    # pipeline runs.  Summary gains ``bpe_n_merges`` / ``bpe_vocab_words`` /
+    # ``bpe_total_tokens``.
+    def bpe(docs, rows_in, write):
+        from document_automation_spark.operators.bpe import (
+            count_tokens,
+            learn_bpe,
+            segment_vocabulary,
+            word_frequencies,
+        )
 
-        if pack_seqlen is not None:
-            summary.update(
-                _pack_stage(
-                    spark,
-                    spark.read.parquet(summary["curated_path"]),
-                    output_path,
-                    pack_seqlen,
-                    tokens_col=(
-                        "n_tokens_bpe" if train_bpe_merges is not None else None
-                    ),
-                )
-            )
+        wf = word_frequencies(docs, min_freq=o.bpe_min_freq).localCheckpoint()
+        merges = learn_bpe(wf, o.train_bpe_merges)
+        merges_path = os.path.join(out, "bpe_merges")
+        spark.createDataFrame(
+            [(i, a, b, m, int(n)) for i, (a, b, m, n) in enumerate(merges)],
+            "rank int, a string, b string, merged string, pair_count long",
+        ).repartition(1).write.mode("overwrite").parquet(merges_path)
 
-        return summary
+        vocab = segment_vocabulary(wf, merges)
+        # lpad TRUNCATES over-width input — pad to 10 digits (covers all of
+        # int32) so huge-document passage indexes can never collide row keys
+        row_key = F.concat_ws(
+            "#", "url", F.lpad(F.col("passage_idx").cast("string"), 10, "0")
+        )
+        counts = count_tokens(
+            docs.select(row_key.alias("_rk"), "text"),
+            vocab,
+            id_col="_rk",
+            broadcast_vocab=True,
+        )
+        obs = Observation("bpe_stage")
+        write(
+            docs.withColumn("_rk", row_key)
+            .join(counts, "_rk", "left")
+            .drop("_rk")
+            .withColumn("n_tokens_bpe", F.coalesce("n_tokens_bpe", F.lit(0)))
+            .observe(obs, F.sum("n_tokens_bpe").alias("tot")),
+            "curated_bpe",
+        )
+        return {
+            "bpe_path": summary["curated_path"],
+            "bpe_merges_path": merges_path,
+            "bpe_n_merges": int(len(merges)),
+            "bpe_vocab_words": int(wf.count()),
+            "bpe_total_tokens": _counters(obs)["tot"],
+        }
+
+    # ``embed=True``: the reference's post-extraction EMBEDDING phase
+    # (the reference's gen-sods-doc-image-ray.py:203-231: embed every
+    # passage, assign the global dense vector_id, push to the index) as one
+    # more distributed stage of the same spark-submit: hash-embed the
+    # curated passages (the model slot — swap ``embed_documents`` for
+    # ``embed_with_model`` + a real encoder factory and nothing else
+    # changes), assign dense 0-based vector ids WITHOUT a global
+    # single-partition window, write the ``embeddings`` table.  The ANN
+    # operators (similarity/ivf) and the serving layer read this table
+    # as-is.  Artifact-only (the curated table is unchanged) and the one
+    # corpus stage every ``curated_mode`` runs.  Summary gains
+    # ``embeddings_path`` / ``n_vectors``.
+    def embed(docs, rows_in, write):
+        from document_automation_spark.functions.embed import (
+            assign_dense_vector_ids,
+            embed_documents,
+        )
+
+        embedded = embed_documents(docs.select("doc_id", "text"), dim=o.embed_dim)
+        with_ids = assign_dense_vector_ids(
+            embedded, order_col="doc_id", cache_registry=cache
+        )
+        embeddings_path = os.path.join(out, "embeddings")
+        write_parquet(with_ids, embeddings_path)
+        n_vectors = spark.read.parquet(embeddings_path).count()
+        return {"embeddings_path": embeddings_path, "n_vectors": n_vectors}
+
+    # ``semantic_dedup_threshold``: SemDeDup
+    # (``operators.similarity.semantic_dedup``) over the embeddings the
+    # ``embed`` stage just wrote: k-means clusters (``semantic_clusters``),
+    # within-cluster cosine pairs ≥ threshold, keep the
+    # farthest-from-centroid member of every semantic group.  Loser
+    # PASSAGES are anti-joined out of the corpus AND the embeddings table
+    # (doc_id is a content-derived per-passage key, so the anti-join is
+    # row-exact; vector ids keep their values — gaps mark dedup losers), so
+    # the ANN/serving input never serves dropped content.  Runs before
+    # ``pack_seqlen`` so chunk maps are built over the deduped corpus.
+    # Summary gains ``semdedup_dropped`` and ``n_vectors`` shrinks to the
+    # survivors.  Requires ``embed=True``.
+    def semdedup(docs, rows_in, write):
+        from document_automation_spark.operators.similarity import semantic_dedup
+
+        emb = spark.read.parquet(summary["embeddings_path"]).withColumnRenamed(
+            "vector_id", "vec_id"
+        )
+        flags = semantic_dedup(
+            emb,
+            n_clusters=o.semantic_clusters,
+            threshold=o.semantic_dedup_threshold,
+            cache_registry=cache,
+        )
+        losers = flags.where(~F.col("kept")).select("doc_id")
+        kept_rows = write(docs.join(losers, "doc_id", "left_anti"), "curated_semdedup")
+        embeddings_path = os.path.join(out, "embeddings_semdedup")
+        write_parquet(
+            flags.where(F.col("kept"))
+            .withColumnRenamed("vec_id", "vector_id")
+            .drop("bucket", "centroid_sim", "kept"),
+            embeddings_path,
+        )
+        return {
+            "semdedup_dropped": summary["n_vectors"] - kept_rows,
+            "n_vectors": kept_rows,
+            "embeddings_path": embeddings_path,
+        }
+
+    # ``pack_seqlen``: the LM-batcher stage: concat-chop sequence packing
+    # (``operators.packing.pack_sequences``) over the final curated
+    # passages into fixed-``pack_seqlen``-token chunks, sharded by the
+    # durable ``bucket`` column (the output-file granularity, so every
+    # shard's cumulative window is bucket-bounded — never corpus-global)
+    # and ordered by the deterministic (doc_id, passage_idx) key; writes the
+    # (passage × chunk) segment map to ``chunk_map/``, partitioned by bucket
+    # like the corpus — the table a training loader joins to materialise
+    # batches.  Chunks are sized by the BPE stage's ``n_tokens_bpe`` when it
+    # ran, by whitespace tokens otherwise.  Artifact-only.  Summary gains
+    # ``pack_n_chunks`` / ``pack_n_segments`` / ``pack_n_tokens``.
+    def pack(docs, rows_in, write):
+        from document_automation_spark.operators.packing import chunk_stats, pack_sequences
+
+        tokens_col = "n_tokens_bpe" if o.train_bpe_merges is not None else None
+        packed_in = docs.select(
+            F.col("bucket").alias("shard"),
+            # 10 digits covers all of int32 — lpad truncates over-width input,
+            # so a narrower pad could collide pack_ids on huge documents
+            F.concat_ws(
+                "#", "doc_id", F.lpad(F.col("passage_idx").cast("string"), 10, "0")
+            ).alias("pack_id"),
+            "text",
+            *([tokens_col] if tokens_col else []),
+        )
+        segments = pack_sequences(
+            packed_in,
+            seq_len=o.pack_seqlen,
+            shard_col="shard",
+            id_col="pack_id",
+            tokens_col=tokens_col,
+        )
+        pack_path = os.path.join(out, "chunk_map")
+        write_parquet(segments, pack_path, partition_by="shard")
+        written = spark.read.parquet(pack_path)
+        stats = (
+            chunk_stats(written, shard_col="shard", id_col="pack_id")
+            .agg(F.sum("n_chunks").alias("n_chunks"), F.sum("n_tokens").alias("n_tokens"))
+            .first()
+        )
+        return {
+            "pack_path": pack_path,
+            "pack_seq_len": o.pack_seqlen,
+            "pack_n_chunks": int(stats["n_chunks"] or 0),
+            "pack_n_tokens": int(stats["n_tokens"] or 0),
+            "pack_n_segments": int(written.count()),
+        }
+
+    return [
+        Stage("fix_encoding", o.fix_encoding, fix_encoding),
+        Stage("dedup_against_path", bool(o.dedup_against_path), xsnap),
+        Stage("cut_dup_spans", o.cut_dup_spans, span_cut),
+        Stage("dedup_paragraphs_mode", o.dedup_paragraphs_mode is not None, paragraph_dedup),
+        Stage("quality_filter", o.quality_filter, quality),
+        Stage("decontaminate_path/pii_redact", bool(o.decontaminate_path or o.pii_redact), hygiene),
+        Stage("classifier_good_path", bool(o.classifier_good_path), classifier),
+        Stage("dsir_target_path", bool(o.dsir_target_path), dsir),
+        Stage("train_bpe_merges", o.train_bpe_merges is not None, bpe),
+        Stage("embed", o.embed, embed),
+        Stage("semantic_dedup_threshold", o.semantic_dedup_threshold is not None, semdedup),
+        Stage("pack_seqlen", o.pack_seqlen is not None, pack),
+    ]
 
 
 def _link_graph_stage(
@@ -1001,283 +982,6 @@ def _link_graph_stage(
     return out
 
 
-def _classifier_stage(
-    spark: SparkSession,
-    curated: DataFrame,
-    output_path: str,
-    good_path: str,
-    alpha: float,
-) -> dict:
-    """GPT-3-style learned quality filter as one more pipeline stage:
-    positives = the trusted reference parquet, negatives = a ~2×-positive
-    deterministic hash-sample of the corpus itself (the GPT-3 recipe —
-    raw crawl IS the negative class), score inline on the corpus scan
-    (map-only MLlib transform, no re-join), pareto-importance keep."""
-    from pyspark.sql import functions as F
-
-    from document_automation_spark.operators.mixing import uniform_hash_col
-    from document_automation_spark.operators.quality_classifier import (
-        pareto_importance_filter,
-        score_quality,
-        train_quality_classifier,
-    )
-
-    pos = spark.read.parquet(good_path).select("text")
-    corpus = curated.withColumnRenamed("content", "text")
-    n_pos = pos.count()
-    n_docs = corpus.count()
-    rate = min(1.0, (2.0 * n_pos) / max(n_docs, 1))
-    neg = corpus.select("doc_id", "text").where(uniform_hash_col("doc_id") < rate)
-    model = train_quality_classifier(pos, neg.select("text"))
-
-    # persist the model beside the corpus (the reusable artifact) AND
-    # reload it — belt-and-braces against the training-summary
-    # serialization hazard (train_quality_classifier now strips the
-    # summary at fit time, and load() never carries one)
-    from pyspark.ml import PipelineModel
-
-    model_path = os.path.join(output_path, "quality_classifier_model")
-    model.write().overwrite().save(model_path)
-    model = PipelineModel.load(model_path)
-
-    scored = score_quality(corpus, model, keep_all=True)
-    kept = pareto_importance_filter(scored, alpha=alpha)
-    classifier_path = os.path.join(output_path, "curated_classifier")
-    # the kept count rides the write as an Observation — no re-read job
-
-    obs = Observation("classifier_stage")
-    (
-        kept.withColumnRenamed("text", "content")
-        .observe(obs, F.count(F.lit(1)).alias("n_kept"))
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
-        .parquet(classifier_path)
-    )
-    n_kept = obs.get["n_kept"]
-    return {
-        "classifier_path": classifier_path,
-        "classifier_n_docs": int(n_docs),
-        "classifier_n_kept": int(n_kept),
-        "classifier_n_pos": int(n_pos),
-    }
-
-
-def _dsir_stage(
-    spark: SparkSession,
-    curated: DataFrame,
-    output_path: str,
-    target_path: str,
-    keep_frac: float,
-) -> dict:
-    """DSIR as a pipeline stage: target = the trusted parquet, raw = the
-    curated corpus itself; keep the Gumbel-top-``keep_frac`` fraction.
-    Production path uses xxhash64 bucketing (the md5 parity leg is the
-    oracle seat's job); k derives from an exact corpus count, which the
-    scoring pass needs anyway."""
-    from pyspark.sql import functions as F
-
-    from document_automation_spark.operators.dsir import (
-        dsir_resample,
-        dsir_scores,
-        train_dsir_weights,
-    )
-
-    target = spark.read.parquet(target_path).select("text")
-    corpus = curated.withColumnRenamed("content", "text")
-    weights = train_dsir_weights(target, corpus.select("text"), hash_impl="xxhash64")
-    # selection is DOC-level: passages of one doc share its doc_id, so
-    # dsir_scores' groupBy already concatenates a doc's grams; count docs
-    # off the scored table (one row per doc) rather than corpus rows
-    scored = dsir_scores(
-        corpus.select("doc_id", "text"), weights, hash_impl="xxhash64"
-    ).localCheckpoint()
-    n_docs = scored.count()
-    k = max(1, int(n_docs * keep_frac))
-    kept_ids = dsir_resample(scored, k=k).select("doc_id", "dsir_score")
-    dsir_path = os.path.join(output_path, "curated_dsir")
-    (
-        corpus.join(kept_ids, "doc_id")
-        .withColumnRenamed("text", "content")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
-        .parquet(dsir_path)
-    )
-    return {
-        "dsir_path": dsir_path,
-        "dsir_n_docs": int(n_docs),
-        "dsir_n_kept": int(min(k, n_docs)),
-    }
-
-
-def _bpe_stage(
-    spark: SparkSession,
-    curated: DataFrame,
-    output_path: str,
-    n_merges: int,
-    min_freq: int,
-) -> dict:
-    """Tokenizer stage: train BPE on the curated corpus, persist the
-    merge table (the reusable tokenizer artifact — rank order IS the
-    tokenizer), annotate every row with its BPE token count.  Counts
-    only: the packer sizes chunks from budgets; loaders that need token
-    STREAMS replay ``encode_documents`` with the persisted merges."""
-    from pyspark.sql import functions as F
-
-    from document_automation_spark.operators.bpe import (
-        count_tokens,
-        learn_bpe,
-        segment_vocabulary,
-        word_frequencies,
-    )
-
-    corpus = curated.withColumnRenamed("content", "text")
-    wf = word_frequencies(corpus, min_freq=min_freq).localCheckpoint()
-    merges = learn_bpe(wf, n_merges)
-    merges_path = os.path.join(output_path, "bpe_merges")
-    spark.createDataFrame(
-        [(i, a, b, m, int(n)) for i, (a, b, m, n) in enumerate(merges)],
-        "rank int, a string, b string, merged string, pair_count long",
-    ).repartition(1).write.mode("overwrite").parquet(merges_path)
-
-    vocab = segment_vocabulary(wf, merges)
-    # lpad TRUNCATES over-width input — pad to 10 digits (covers all of
-    # int32) so huge-document passage indexes can never collide row keys
-    row_key = F.concat_ws(
-        "#", "url", F.lpad(F.col("passage_idx").cast("string"), 10, "0")
-    )
-    counts = count_tokens(
-        corpus.select(row_key.alias("_rk"), "text"),
-        vocab,
-        id_col="_rk",
-        broadcast_vocab=True,
-    )
-    bpe_path = os.path.join(output_path, "curated_bpe")
-    # total-token counter rides the write as an Observation — no re-read
-
-    obs = Observation("bpe_stage")
-    (
-        corpus.withColumn("_rk", row_key)
-        .join(counts, "_rk", "left")
-        .drop("_rk")
-        .withColumn("n_tokens_bpe", F.coalesce("n_tokens_bpe", F.lit(0)))
-        .withColumnRenamed("text", "content")
-        .observe(obs, F.sum("n_tokens_bpe").alias("tot"))
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
-        .parquet(bpe_path)
-    )
-    stats = obs.get
-    return {
-        "bpe_path": bpe_path,
-        "bpe_merges_path": merges_path,
-        "bpe_n_merges": int(len(merges)),
-        "bpe_vocab_words": int(wf.count()),
-        "bpe_total_tokens": int(stats["tot"] or 0),
-    }
-
-
-def _pack_stage(
-    spark: SparkSession,
-    curated: DataFrame,
-    output_path: str,
-    seq_len: int,
-    tokens_col: str | None = None,
-) -> dict:
-    """The LM-batcher stage: pack the curated passages into
-    fixed-``seq_len``-token chunks, sharded by the durable ``bucket``
-    column (each shard's cumulative window is bucket-bounded — never
-    corpus-global) with the deterministic (doc_id, passage_idx) order
-    key.  Writes the segment map (the loader's join table) partitioned
-    by bucket like the corpus itself.  ``tokens_col`` switches the chunk
-    budget from whitespace counts to a precomputed column (the BPE
-    stage's ``n_tokens_bpe``)."""
-    from pyspark.sql import functions as F
-
-    from document_automation_spark.operators.packing import chunk_stats, pack_sequences
-
-    packed_in = curated.select(
-        F.col("bucket").alias("shard"),
-        # 10 digits covers all of int32 — lpad truncates over-width input,
-        # so a narrower pad could collide pack_ids on huge documents
-        F.concat_ws(
-            "#", "doc_id", F.lpad(F.col("passage_idx").cast("string"), 10, "0")
-        ).alias("pack_id"),
-        F.col("content").alias("text"),
-        *([F.col(tokens_col)] if tokens_col else []),
-    )
-    segments = pack_sequences(
-        packed_in,
-        seq_len=seq_len,
-        shard_col="shard",
-        id_col="pack_id",
-        tokens_col=tokens_col,
-    )
-    pack_path = os.path.join(output_path, "chunk_map")
-    (
-        segments.write.mode("overwrite")
-        .partitionBy("shard")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
-        .parquet(pack_path)
-    )
-    stats = (
-        chunk_stats(spark.read.parquet(pack_path), shard_col="shard", id_col="pack_id")
-        .agg(
-            F.sum("n_chunks").alias("n_chunks"),
-            F.sum("n_tokens").alias("n_tokens"),
-        )
-        .first()
-    )
-    n_segments = spark.read.parquet(pack_path).count()
-    return {
-        "pack_path": pack_path,
-        "pack_seq_len": seq_len,
-        "pack_n_chunks": int(stats["n_chunks"] or 0),
-        "pack_n_tokens": int(stats["n_tokens"] or 0),
-        "pack_n_segments": int(n_segments),
-    }
-
-
-def _embed_stage(
-    spark: SparkSession, curated: DataFrame, output_path: str, dim: int
-) -> dict:
-    """The reference's post-extraction EMBEDDING phase
-    (/root/reference/src/gen-sods-doc-image-ray.py:203-231: embed every
-    passage, assign the global dense vector_id, push to the index) as one
-    more distributed stage of the same spark-submit: hash-embed the
-    curated passages (the model slot — swap ``embed_documents`` for
-    ``embed_with_model`` + a real encoder factory and nothing else
-    changes), assign dense 0-based vector ids WITHOUT a global
-    single-partition window, write the embeddings table.  The ANN
-    operators (similarity/ivf) and the serving layer read this table
-    as-is."""
-    from pyspark.sql import functions as F
-
-    from document_automation_spark.functions.embed import (
-        assign_dense_vector_ids,
-        embed_documents,
-    )
-
-    docs = curated.select("doc_id", F.col("content").alias("text"))
-    embedded = embed_documents(docs, dim=dim)
-    cache = []
-    with_ids = assign_dense_vector_ids(embedded, order_col="doc_id", cache_registry=cache)
-    embeddings_path = os.path.join(output_path, "embeddings")
-    (
-        with_ids.write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
-        .parquet(embeddings_path)
-    )
-    for handle in cache:
-        handle.unpersist()
-    n_vectors = spark.read.parquet(embeddings_path).count()
-    return {"embeddings_path": embeddings_path, "n_vectors": n_vectors}
-
-
 def read_curated(spark: SparkSession, output_path: str) -> DataFrame:
     """Reconstruct the curated view from a ``curated_mode='view'`` run:
     raw documents table + persisted gate config + tombstone anti-join.
@@ -1302,20 +1006,27 @@ def read_curated(spark: SparkSession, output_path: str) -> DataFrame:
     )
 
 
-def main(argv=None) -> None:
+def _parser() -> argparse.ArgumentParser:
+    """The CLI.  Every ``dest`` outside the source group and ``--buckets``
+    is a :func:`run_ingest_pipeline` keyword, so ``main`` passes them
+    through unchanged."""
     parser = argparse.ArgumentParser(description="crawl ingest: pages → curated corpus")
     src = parser.add_mutually_exclusive_group(required=True)
     src.add_argument("--input", help="pages parquet path")
     src.add_argument("--warc", help="directory of .warc files")
     src.add_argument("--wet", help="directory of .wet files (text path)")
     src.add_argument("--synthesize", type=int, help="N deterministic fixture pages")
-    parser.add_argument("--output", required=True)
+    parser.add_argument("--output", dest="output_path", metavar="OUTPUT", required=True)
     parser.add_argument("--input-fingerprint", required=True)
     parser.add_argument("--buckets", type=int, default=64)
     parser.add_argument("--min-chars", type=int, default=None)
-    parser.add_argument("--scripts", help="comma list, e.g. latin,zh")
-    parser.add_argument("--no-url-dedup", action="store_true")
-    parser.add_argument("--no-exact-dedup", action="store_true")
+    parser.add_argument(
+        "--scripts",
+        type=lambda s: s.split(",") if s else None,
+        help="comma list, e.g. latin,zh",
+    )
+    parser.add_argument("--no-url-dedup", dest="url_dedup", action="store_false")
+    parser.add_argument("--no-exact-dedup", dest="drop_exact_dups", action="store_false")
     parser.add_argument(
         "--cut-dup-spans",
         action="store_true",
@@ -1324,6 +1035,7 @@ def main(argv=None) -> None:
     parser.add_argument("--span-k", type=int, default=32)
     parser.add_argument(
         "--robots",
+        dest="robots_path",
         metavar="SNAPSHOT_PARQUET",
         help="robots.txt snapshot table (host, robots_txt): gate pages for "
         "--robots-agent under Google-REP precedence BEFORE extraction",
@@ -1339,6 +1051,7 @@ def main(argv=None) -> None:
     parser.add_argument("--pagerank-iters", type=int, default=5)
     parser.add_argument(
         "--dedup-paragraphs",
+        dest="dedup_paragraphs_mode",
         metavar="MODE",
         help="append CCNet-style cross-document paragraph dedup over the "
         "curated passages: 'first' (globally-first copy survives) or "
@@ -1355,6 +1068,7 @@ def main(argv=None) -> None:
     )
     parser.add_argument(
         "--decontaminate",
+        dest="decontaminate_path",
         metavar="PARQUET",
         help="append benchmark decontamination: drop curated docs sharing "
         "an n-gram with the eval-set parquet (text column) at this path",
@@ -1362,6 +1076,7 @@ def main(argv=None) -> None:
     parser.add_argument("--decontaminate-ngram", type=int, default=13)
     parser.add_argument(
         "--redact-pii",
+        dest="pii_redact",
         action="store_true",
         help="append PII redaction (email/ssn/ipv4/phone) over the curated "
         "corpus; content-derived ids re-derived after the rewrite",
@@ -1374,6 +1089,7 @@ def main(argv=None) -> None:
     )
     parser.add_argument(
         "--quality-classifier",
+        dest="classifier_good_path",
         metavar="GOOD_PARQUET",
         help="append the GPT-3-style learned quality filter: train "
         "reference-vs-crawl LR (positives = this parquet's text column, "
@@ -1382,6 +1098,7 @@ def main(argv=None) -> None:
     parser.add_argument("--classifier-alpha", type=float, default=9.0)
     parser.add_argument(
         "--dedup-against",
+        dest="dedup_against_path",
         metavar="CORPUS_PARQUET",
         help="append cross-snapshot incremental dedup: drop curated rows "
         "whose content already exists in this previously-published corpus",
@@ -1400,6 +1117,7 @@ def main(argv=None) -> None:
     )
     parser.add_argument(
         "--dsir-target",
+        dest="dsir_target_path",
         metavar="TARGET_PARQUET",
         help="append DSIR importance resampling: keep the corpus fraction "
         "that best matches this trusted target corpus's hashed-ngram "
@@ -1408,6 +1126,7 @@ def main(argv=None) -> None:
     parser.add_argument("--dsir-keep-frac", type=float, default=0.5)
     parser.add_argument(
         "--train-bpe",
+        dest="train_bpe_merges",
         type=int,
         metavar="N_MERGES",
         help="append the tokenizer stage: train a BPE merge table on the "
@@ -1428,6 +1147,7 @@ def main(argv=None) -> None:
     parser.add_argument("--embed-dim", type=int, default=16)
     parser.add_argument(
         "--semantic-dedup",
+        dest="semantic_dedup_threshold",
         type=float,
         metavar="THRESHOLD",
         help="append SemDeDup over the --embed stage's embeddings: drop the "
@@ -1445,7 +1165,13 @@ def main(argv=None) -> None:
         "table (fastest wall-clock; quarantine rows retained — read with "
         "error IS NULL)",
     )
-    args = parser.parse_args(argv)
+    return parser
+
+
+def main(argv=None) -> None:
+    kwargs = vars(_parser().parse_args(argv))
+    source = {name: kwargs.pop(name) for name in ("input", "warc", "wet", "synthesize")}
+    n_buckets = kwargs.pop("buckets")
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
     from document_automation_spark.operators.extract import ExtractConfig
@@ -1454,62 +1180,27 @@ def main(argv=None) -> None:
     spark = SparkSession.builder.appName("ingest-pipeline").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
-        if args.synthesize:
+        if source["synthesize"]:
             from document_automation_spark.sources.pages import pages_df
 
-            pages = pages_df(spark, args.synthesize)
-            from_text = False
-        elif args.warc:
+            pages = pages_df(spark, source["synthesize"])
+        elif source["warc"]:
             from document_automation_spark.sources.warc import pages_from_warc
 
-            pages = pages_from_warc(spark, args.warc)
-            from_text = False
-        elif args.wet:
+            pages = pages_from_warc(spark, source["warc"])
+        elif source["wet"]:
             from document_automation_spark.sources.warc import pages_from_wet
 
-            pages = pages_from_wet(spark, args.wet)
-            from_text = True
+            pages = pages_from_wet(spark, source["wet"])
         else:
-            pages = spark.read.parquet(args.input)
-            from_text = False
+            pages = spark.read.parquet(source["input"])
 
         summary = run_ingest_pipeline(
             spark,
             pages,
-            args.output,
-            args.input_fingerprint,
-            cfg=ExtractConfig(n_buckets=args.buckets),
-            url_dedup=not args.no_url_dedup,
-            min_chars=args.min_chars,
-            scripts=args.scripts.split(",") if args.scripts else None,
-            drop_exact_dups=not args.no_exact_dedup,
-            from_text=from_text,
-            cut_dup_spans=args.cut_dup_spans,
-            span_k=args.span_k,
-            dedup_paragraphs_mode=args.dedup_paragraphs,
-            robots_path=args.robots,
-            robots_agent=args.robots_agent,
-            link_graph=args.link_graph,
-            pagerank_iters=args.pagerank_iters,
-            quality_filter=args.quality_filter,
-            curated_mode=args.curated_mode,
-            decontaminate_path=args.decontaminate,
-            decontaminate_ngram=args.decontaminate_ngram,
-            pii_redact=args.redact_pii,
-            embed=args.embed,
-            embed_dim=args.embed_dim,
-            semantic_dedup_threshold=args.semantic_dedup,
-            semantic_clusters=args.semantic_clusters,
-            pack_seqlen=args.pack_seqlen,
-            classifier_good_path=args.quality_classifier,
-            classifier_alpha=args.classifier_alpha,
-            dedup_against_path=args.dedup_against,
-            trust_existing_sha=args.trust_existing_sha,
-            fix_encoding=args.fix_encoding,
-            dsir_target_path=args.dsir_target,
-            dsir_keep_frac=args.dsir_keep_frac,
-            train_bpe_merges=args.train_bpe,
-            bpe_min_freq=args.bpe_min_freq,
+            cfg=ExtractConfig(n_buckets=n_buckets),
+            from_text=bool(source["wet"]),
+            **kwargs,
         )
         print(json.dumps(summary))
     finally:

@@ -60,3 +60,16 @@ def test_cli_rejects_view_mode_with_rewriting_stage(spark, tmp_path, capsys):
             "--curated-mode", "view",
             "--fix-encoding",
         ])
+
+
+def test_every_cli_dest_is_a_pipeline_keyword():
+    """main() passes the parsed flags straight through as keywords, so
+    every argparse dest outside the source group and --buckets must name
+    a run_ingest_pipeline parameter (no Spark needed)."""
+    import inspect
+
+    from document_automation_spark.jobs.ingest_pipeline import _parser, run_ingest_pipeline
+
+    params = inspect.signature(run_ingest_pipeline).parameters
+    dests = {a.dest for a in _parser()._actions if a.dest != "help"}
+    assert dests - params.keys() == {"input", "warc", "wet", "synthesize", "buckets"}

@@ -1390,3 +1390,81 @@ class TestFixEncodingStage:
         assert summary["mojibake_dedup_losers"] == 1
         # keeper rule matches curation's: min (url, passage_idx) wins
         assert final.where(F.col("content") == text).first().url == "https://a.example.com/x"
+
+    def test_xsnap_rows_in_counts_rows_after_repair_collapse(self, spark, tmp_path):
+        """The cross-snapshot stage reads the REPAIRED table, which the
+        encoding stage's re-applied dedup made smaller than curation's
+        output — xsnap_rows_in must count the rows that actually entered
+        the stage, not curation's rows_out."""
+        import datetime as dt
+
+        text = ("It’s the same café article für €5 with enough words that "
+                "the gates keep it either way, clean or repaired.")
+        moji = text.encode("utf-8").decode("cp1252")
+        schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+        pages = spark.createDataFrame(
+            [
+                ("https://a.example.com/x", dt.datetime(2024, 1, 1), None, text, "en"),
+                ("https://b.example.com/y", dt.datetime(2024, 1, 1), None, moji, "en"),
+                ("https://c.example.com/z", dt.datetime(2024, 1, 1), None,
+                 "an unrelated control document with plenty of plain words", "en"),
+            ],
+            schema,
+        )
+        prior = str(tmp_path / "prior")
+        spark.createDataFrame(
+            [("a prior snapshot that shares no content with this crawl",)],
+            "content string",
+        ).write.parquet(prior)
+        summary = run_ingest_pipeline(
+            spark, pages, str(tmp_path / "c"), "fp-xsnap-rows",
+            cfg=ExtractConfig(n_buckets=2), from_text=True, fix_encoding=True,
+            dedup_against_path=prior,
+        )
+        assert summary["mojibake_dedup_losers"] == 1
+        assert summary["xsnap_rows_in"] == (
+            summary["rows_out"] - summary["mojibake_dedup_losers"]
+        )
+        # an unrelated prior corpus drops nothing
+        assert summary["xsnap_rows_kept"] == summary["xsnap_rows_in"] == 2
+
+
+class TestConfigValidation:
+    """A rejected config is rejected before any Spark job runs, and a
+    failing run leaves no persisted table pinned in the session."""
+
+    def _persisted(self, spark) -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def test_rejected_config_runs_no_job_and_pins_nothing(self, spark, tmp_path):
+        pages = pages_df(spark, 20, partitions=2)
+        sc = spark.sparkContext
+        before = self._persisted(spark)
+        sc.setLocalProperty("spark.jobGroup.id", "rejected-config")
+        try:
+            with pytest.raises(ValueError, match="fix_encoding"):
+                run_ingest_pipeline(
+                    spark, pages, str(tmp_path / "z"), "fp",
+                    cfg=ExtractConfig(n_buckets=2),
+                    curated_mode="view", fix_encoding=True,
+                )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("rejected-config") == []
+        assert self._persisted(spark) == before
+        assert not os.path.exists(tmp_path / "z")
+
+    def test_failing_stage_releases_url_dedup_cache(self, spark, tmp_path, monkeypatch):
+        from document_automation_spark.jobs import ingest_pipeline
+
+        def broken_link_graph(*args, **kwargs):
+            raise RuntimeError("link graph failed")
+
+        monkeypatch.setattr(ingest_pipeline, "_link_graph_stage", broken_link_graph)
+        before = self._persisted(spark)
+        with pytest.raises(RuntimeError, match="link graph failed"):
+            run_ingest_pipeline(
+                spark, pages_df(spark, 24, partitions=2), str(tmp_path / "lg"), "fp",
+                cfg=ExtractConfig(n_buckets=2), link_graph=True,
+            )
+        assert self._persisted(spark) == before
