@@ -211,6 +211,7 @@ def run_ingest_pipeline(
         run_extraction_job,
         write_parquet,
     )
+    from document_automation_spark.plans.metrics import one_row
 
     summary: dict = {}
     cache: list = []  # every persisted handle; released in the finally below
@@ -270,10 +271,13 @@ def run_ingest_pipeline(
             # the memory-footprint trade that makes this the small/medium-
             # scale mode: at 100 TB prefer 'view' (metadata-only curation) or
             # 'copy' (write-then-curate, nothing persisted).
-            extract_fn = docs_fn
+            # The dedup must see EVERY bucket, so this builder ignores the
+            # pending-bucket pages a resume hands it and extracts the full
+            # `pages`; the durable writer drops the done buckets after it.
+            extract_fn, all_pages = docs_fn, pages
 
-            def docs_fn(pages_, cfg_):
-                docs = extract_fn(pages_, cfg_).persist(StorageLevel.MEMORY_AND_DISK)
+            def docs_fn(_pending, cfg_):
+                docs = extract_fn(all_pages, cfg_).persist(StorageLevel.MEMORY_AND_DISK)
                 cache.append(docs)
                 curated, collect = curate_extracted(
                     docs, keep_quarantined=True, **curation
@@ -349,12 +353,11 @@ def run_ingest_pipeline(
                     - stats_row["gated"] - n_losers
                 )
                 # persist the gate config so read_curated applies the SAME policy
-                spark.createDataFrame(
-                    [(min_chars, ",".join(scripts) if scripts else None)],
+                one_row(
+                    spark,
                     "min_chars int, scripts string",
-                ).repartition(1).write.mode("overwrite").json(
-                    os.path.join(output_path, "_curation_config")
-                )
+                    dict(min_chars=min_chars, scripts=",".join(scripts) if scripts else None),
+                ).write.mode("overwrite").json(os.path.join(output_path, "_curation_config"))
                 summary.update(curated_mode="view", losers_path=losers_path)
 
                 def read_docs() -> DataFrame:
@@ -375,9 +378,7 @@ def run_ingest_pipeline(
                 def read_docs() -> DataFrame:
                     return spark.read.parquet(summary["curated_path"])
 
-            spark.createDataFrame([stats_row], STATS_SCHEMA).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(
+            one_row(spark, STATS_SCHEMA, stats_row).write.mode("overwrite").parquet(
                 os.path.join(output_path, "_curation_stats")
             )
             summary.update(stats_row)

@@ -34,7 +34,8 @@ pages):
 Returns ``(curated_df, collect_stats)`` — ``collect_stats()`` yields the
 1-row stats DataFrame and must be called AFTER the first action on
 ``curated_df`` (it blocks otherwise; the observation fires with that
-action).
+action).  The stats frame is built in the JVM (``plans.metrics.one_row``),
+so reading or writing it starts no Python worker.
 """
 
 from __future__ import annotations
@@ -43,6 +44,8 @@ from typing import Callable, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from document_automation_spark.plans.metrics import one_row
 
 STATS_SCHEMA = (
     "rows_in long, quarantined long, gated long, deduped long, rows_out long"
@@ -174,9 +177,16 @@ def curate_extracted(
         n_gated_out = int(gi["gated"] or 0)
         n_curated = int(go["rows_out"] or 0)  # sum() is NULL on empty input
         n_gated_in = total - n_quarantined - n_gated_out
-        return spark.createDataFrame(
-            [(total, n_quarantined, n_gated_out, n_gated_in - n_curated, n_curated)],
+        return one_row(
+            spark,
             STATS_SCHEMA,
+            dict(
+                rows_in=total,
+                quarantined=n_quarantined,
+                gated=n_gated_out,
+                deduped=n_gated_in - n_curated,
+                rows_out=n_curated,
+            ),
         )
 
     return curated, collect_stats

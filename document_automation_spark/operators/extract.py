@@ -228,14 +228,18 @@ def extract_documents_arrow(
     return keyed.mapInArrow(extract_batches, DOCUMENTS_SCHEMA)
 
 
-def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
-    """Attach the resume/layout bucket: ``pmod(xxhash64(url), n_buckets)``.
+def bucket_of(n_buckets: int) -> "F.Column":
+    """The resume/layout bucket of a row: ``pmod(xxhash64(url), n_buckets)``."""
+    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
 
-    Computed as a JVM expression on the input so resume filters prune rows
-    BEFORE the Python stage ever sees them."""
-    return pages.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
+
+def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
+    """Attach the resume/layout bucket (:func:`bucket_of`).
+
+    Computed as a JVM expression on the input, so the durable writer's
+    resume filter (the same expression on the pages) prunes rows BEFORE
+    the Python stage ever sees them."""
+    return pages.withColumn("bucket", bucket_of(n_buckets))
 
 
 def passage_counts(documents: DataFrame) -> DataFrame:

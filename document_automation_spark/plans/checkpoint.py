@@ -9,14 +9,25 @@ writers:
 * output is hash-partitioned by ``bucket = pmod(xxhash64(url), n_buckets)``
   (the column the extraction operator already emits) and written with
   dynamic partition overwrite, so re-processing a bucket REPLACES its
-  files — write idempotency;
+  files — write idempotency.  The mode is a writer option on the data
+  write only, never a session conf: the caller's later partitioned
+  overwrites keep their static semantics;
+* the writer stage runs ``4 × defaultParallelism`` tasks, each bucket
+  sub-split into ``max(1, tasks // n_buckets)`` salt slices — task count
+  follows the cores, file count the buckets (one file per bucket whenever
+  ``n_buckets >= 4 × cores``);
 * after the data commit, one manifest row per completed bucket is appended:
   ``(bucket, run_id, input_fingerprint, rows_in, rows_out, error_rows,
   wall_ms, committed_at)`` — lineage + counter metrics required by the
-  north rule;
+  north rule.  The append is ONE JVM job: the post-commit per-bucket
+  aggregate is written straight to ``_manifest`` (``coalesce(1)``), its
+  row count riding the write as an Observation — no rows travel through
+  the driver or a Python worker;
 * on resume, pending work = input buckets ANTI-JOIN done manifest buckets
-  (for the same input fingerprint).  A crash between data write and
-  manifest append re-runs that bucket; overwrite makes that harmless.
+  (for the same input fingerprint), filtered on the PAGES before the
+  extraction kernel.  A crash between data write and manifest append
+  re-runs that bucket; overwrite makes that harmless.  A fresh directory
+  (no ``_manifest``) costs no Spark job at all.
 
 On Iceberg the manifest append and data commit would share a transaction
 (snapshot id recorded in the manifest); with plain parquet the
@@ -31,12 +42,13 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from document_automation_spark.operators.extract import (
     DOCUMENTS_SCHEMA,
     ExtractConfig,
+    bucket_of,
     extract_documents,
 )
 
@@ -54,16 +66,30 @@ def data_path(output_path: str) -> str:
     return os.path.join(output_path, "data")
 
 
-def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
+def _manifest_or_none(spark: SparkSession, output_path: str) -> DataFrame | None:
+    """The manifest table, or None before the first commit.  One
+    filesystem stat decides, so probing a fresh directory runs no Spark
+    job — and no failed read, whose analysis error Spark logs with a
+    stack trace once the session has used an Observation."""
     path = manifest_path(output_path)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:  # first run: no manifest yet
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(jpath):
+        return None
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+
+
+def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
+    manifest = _manifest_or_none(spark, output_path)
+    if manifest is None:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return manifest
 
 
 def done_buckets(spark: SparkSession, output_path: str, input_fingerprint: str) -> list[int]:
-    manifest = read_manifest(spark, output_path)
+    manifest = _manifest_or_none(spark, output_path)
+    if manifest is None:
+        return []
     return [
         r.bucket
         for r in manifest.filter(F.col("input_fingerprint") == input_fingerprint)
@@ -73,7 +99,9 @@ def done_buckets(spark: SparkSession, output_path: str, input_fingerprint: str) 
     ]
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: str | None = None) -> None:
+def write_parquet(
+    df: DataFrame, path: str, partition_by: str | None = None, dynamic: bool = False
+) -> None:
     """Overwrite ``path`` with ``df`` as zstd level-1 parquet — the one
     codec decision for the durable writer and every corpus table the
     ingest job writes.  The codec is set as WRITER options, so the choice
@@ -83,7 +111,12 @@ def write_parquet(df: DataFrame, path: str, partition_by: str | None = None) -> 
     shrinks files another 22% but costs ~15% wall — at 100 TB the data
     table is re-read only by accounting + curation, so encode speed wins
     here and long-retention sinks can re-encode at a higher level
-    downstream."""
+    downstream.
+
+    ``dynamic=True`` replaces only the ``partition_by`` directories ``df``
+    writes (the durable writer's per-bucket idempotency); it is a writer
+    option too, so a later static overwrite in the same session still
+    drops stale partitions."""
     writer = (
         df.write.mode("overwrite")
         .option("compression", "zstd")
@@ -91,6 +124,8 @@ def write_parquet(df: DataFrame, path: str, partition_by: str | None = None) -> 
     )
     if partition_by:
         writer = writer.partitionBy(partition_by)
+    if dynamic:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.parquet(path)
 
 
@@ -106,35 +141,50 @@ def run_extraction_job(
     """Run (or resume) the extraction job with per-bucket checkpointing.
 
     Returns a summary dict with processed/skipped bucket counts and
-    counter totals.  ``fail_buckets_above`` is a test hook: buckets with id
-    >= the value raise mid-kernel, simulating a mid-job crash.
+    counter totals.  ``fail_buckets_above`` is a test hook: rows of buckets
+    with id >= the value are dropped after the kernel, simulating a crash
+    after extraction but before those buckets were written.
 
     ``docs_fn`` is the documents-plan builder, ``(pages, cfg) ->
     DOCUMENTS_SCHEMA DataFrame`` — default :func:`extract_documents` (the
     HTML/PDF path); pass ``operators.extract.documents_from_text`` to run
     the WET/pre-extracted-text path through the SAME bucketed write +
     manifest + resume machinery (every plan builder emits the ``bucket``
-    column via ``with_bucket``, which is all the checkpointing needs).
+    column via ``with_bucket``, which is all the checkpointing needs).  On
+    resume ``docs_fn`` receives only the pages of PENDING buckets; a
+    builder whose result depends on the whole corpus (the fused ingest's
+    corpus-wide dedup) closes over the full pages instead, and the done
+    buckets are filtered from its output.
 
-    Write parallelism is decoupled from RESUME granularity (round-2
-    verdict #5): round 2 repartitioned on ``bucket`` alone — exactly one
-    writer task per bucket, so a 1000-executor cluster writing 64 buckets
-    left most of the cluster idle at the sink.  Now each bucket is
-    sub-split into ``k = write_partitions // n_buckets`` salt slices, with
-    ``write_partitions = max(n_buckets, 4× cluster parallelism)``, and the
-    shuffle keys on (bucket, salt): ~``write_partitions`` concurrent
-    writers, ~``write_partitions`` total files (NOT tasks × buckets —
-    keying on something url-unique instead would write every bucket from
-    every task, an O(tasks·buckets) small-file explosion: measured 11.2 s
-    vs 2.0 s for the same 20k-page write).  Small clusters keep the
-    round-2 one-file-per-bucket layout and big clusters scale writers
-    linearly.  Dynamic partition overwrite is per-DIRECTORY, so
-    multi-file buckets resume exactly as before (pinned by
-    tests/test_resume.py).  The data files go through :func:`write_parquet`
-    (zstd level 1).
+    Write parallelism follows the CORES, file count the BUCKETS: the
+    writer stage runs ``write_partitions = 4 × defaultParallelism`` tasks
+    and each bucket is sub-split into ``k = max(1, write_partitions //
+    n_buckets)`` salt slices, the shuffle keyed on (bucket, salt).  When
+    ``n_buckets >= write_partitions`` (k = 1) every bucket lands in exactly
+    one task — one file per bucket, with no more tasks than the cluster
+    runs at once (a task per bucket measured ~39 ms of closure
+    deserialization each, 64 tasks on 4 cores); a large cluster gets k
+    slices per bucket and ~``write_partitions`` concurrent writers and
+    files.  (Keying on something url-unique instead would write every
+    bucket from every task, an O(tasks·buckets) small-file explosion:
+    measured 11.2 s vs 2.0 s for the same 20k-page write.)  Dynamic
+    partition overwrite is per-DIRECTORY, so multi-file buckets resume
+    exactly as before (pinned by tests/test_resume.py).  The data files go
+    through :func:`write_parquet` (zstd level 1, dynamic overwrite as a
+    writer option — the caller's session conf is left untouched).
+
+    The manifest append is one JVM job: the post-commit per-bucket
+    aggregate is written straight to ``_manifest``, and
+    ``buckets_processed`` is an Observation on that write.
     """
     run_id = uuid.uuid4().hex[:12]
-    already_done = set(done_buckets(spark, output_path, input_fingerprint))
+    done = sorted(done_buckets(spark, output_path, input_fingerprint))
+
+    if done:
+        # resume anti-filter on the PAGES, below the Python kernel: the
+        # done-set is tiny (O(n_buckets)), so an isin literal on the same
+        # bucket expression prunes rows before they cross into mapInPandas
+        pages = pages.filter(~bucket_of(cfg.n_buckets).isin(done))
 
     # content_sha (32-byte binary) rides the data files: computed here as a
     # JVM expression during the one pass that already has content in hand,
@@ -145,10 +195,10 @@ def run_extraction_job(
     docs = (docs_fn or extract_documents)(pages, cfg).withColumn(
         "content_sha", F.unhex(F.sha2(F.col("content"), 256))
     )
-    if already_done:
-        # resume anti-filter: the done-set is tiny (O(n_buckets)) — an
-        # isin literal keeps it a pushed-down scan predicate, no join.
-        docs = docs.filter(~F.col("bucket").isin(sorted(already_done)))
+    if done:
+        # kept above the kernel too: a docs_fn that reads the full pages
+        # (fused curation) must still not rewrite committed buckets
+        docs = docs.filter(~F.col("bucket").isin(done))
 
     if fail_buckets_above is not None:
         # test hook: pretend the job died before these buckets were written
@@ -157,13 +207,12 @@ def run_extraction_job(
     # 4× parallelism (round 6, was 2×): the writer stage is zstd-encode
     # CPU-bound and bucket sizes are uneven, so at 2× cores the encode tail
     # left cores idle — 200k-page durable write measured 6.6 s → 4.9 s at
-    # 4×.  File count equals write_partitions either way (bounded); at
-    # cluster scale n_buckets usually dominates the max() and nothing
-    # changes.
-    write_partitions = max(cfg.n_buckets, spark.sparkContext.defaultParallelism * 4)
+    # 4×.  n_buckets does not raise the task count: tasks beyond 4× cores
+    # only add per-task overhead (30k pages into 64 buckets on local[4]:
+    # the writer stage took 2.07 s at 64 tasks, 1.13 s at 16).
+    write_partitions = spark.sparkContext.defaultParallelism * 4
     salt_k = max(1, write_partitions // cfg.n_buckets)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     started = time.time()
     # extraction is map-only; the shuffle happens HERE, on the extracted
     # rows (≪ raw payload size).  (bucket, salt) sub-splits each bucket
@@ -175,6 +224,7 @@ def run_extraction_job(
         .drop("_salt"),
         data_path(output_path),
         partition_by="bucket",
+        dynamic=True,
     )
     wall_ms = int((time.time() - started) * 1000)
 
@@ -189,8 +239,8 @@ def run_extraction_job(
     written = spark.read.schema("passage_idx int, error string").parquet(
         data_path(output_path)
     )
-    if already_done:
-        written = written.filter(~F.col("bucket").isin(sorted(already_done)))
+    if done:
+        written = written.filter(~F.col("bucket").isin(done))
     stats = (
         written.groupBy("bucket")
         .agg(
@@ -213,25 +263,20 @@ def run_extraction_job(
             F.current_timestamp().alias("committed_at"),
         )
     )
-    # one materialization: the stats aggregate is O(n_buckets) rows, so
-    # collect once and append from the local copy — writing the plan and
-    # then count()ing it would re-run the post-commit scan+agg twice
-    # (measured ~0.7 s of the 3.4 s durable job at 20k pages / 8 cores)
-    stat_rows = stats.collect()
-    # repartition(1), NOT coalesce(1): a parallelize()-backed local frame
-    # coalesced without a shuffle chains its ~defaultParallelism python
-    # partitions SERIALLY through one task (each a worker round-trip —
-    # measured 5.4 s for 64 manifest rows on local[32]); the one-row
-    # shuffle runs them in parallel and costs ~0.5 s.
-    spark.createDataFrame(stat_rows, stats.schema).repartition(1).write.mode(
+    # one job appends the O(n_buckets) aggregate straight from the JVM and
+    # counts it on the way; a collect() + createDataFrame(rows) round trip
+    # would add a job through sc.parallelize and Python workers (0.14-0.44 s
+    # on local[4]).  coalesce(1) collapses only the final aggregation (one
+    # file); the pruned scan below the shuffle stays wide.
+    appended = Observation("manifest_append")
+    stats.observe(appended, F.count(F.lit(1)).alias("buckets")).coalesce(1).write.mode(
         "append"
     ).parquet(manifest_path(output_path))
 
-    processed = len(stat_rows)
     return {
         "run_id": run_id,
-        "buckets_processed": processed,
-        "buckets_skipped": len(already_done),
+        "buckets_processed": int(appended.get["buckets"]),
+        "buckets_skipped": len(done),
     }
 
 

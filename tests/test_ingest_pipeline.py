@@ -542,6 +542,55 @@ class TestIngestPipeline:
         }
         assert rows_a == rows_b
 
+    def test_fused_resume_dedups_against_committed_buckets(self, spark, tmp_path):
+        """A resume hands the plan builder only pending buckets' pages, but
+        fused curation must still see the whole corpus: a pending-bucket
+        copy whose keeper sits in an already-committed bucket is dropped."""
+        from document_automation_spark.operators.curate import curate_extracted
+        from document_automation_spark.operators.extract import bucket_of, extract_documents
+        from document_automation_spark.plans.checkpoint import run_extraction_job
+        from document_automation_spark.sources.pages import PAGES_SCHEMA
+
+        cfg = ExtractConfig(n_buckets=8)
+        candidates = sorted(
+            (r.url, r.b)
+            for r in spark.createDataFrame(
+                [(f"http://dup.example.com/p{i:02d}",) for i in range(32)], "url string"
+            ).select("url", bucket_of(cfg.n_buckets).alias("b")).collect()
+        )
+        keeper = next(u for u, b in candidates if b < 4)
+        copy = next(u for u, b in candidates if u > keeper and b >= 4)
+        # a unique page in a pending bucket keeps the resumed write non-empty
+        # (an empty fused resume write loses curation's Observations)
+        other = next(u for u, b in candidates if u != copy and b >= 4)
+        html = b"<html><body><p>" + b"shared boilerplate paragraph " * 6 + b"</p></body></html>"
+        ts = dt.datetime(2024, 1, 1)
+        pages = spark.createDataFrame(
+            [
+                (keeper, ts, html, None, None),
+                (copy, ts, html, None, None),
+                (other, ts, b"<html><body><p>" + b"a page of its own " * 6 + b"</p></body></html>", None, None),
+            ],
+            PAGES_SCHEMA,
+        )
+        out = str(tmp_path / "fused_xbucket")
+
+        def fused_fn(pages_, cfg_):
+            curated, _ = curate_extracted(extract_documents(pages_, cfg_), keep_quarantined=True)
+            return curated
+
+        crashed = run_extraction_job(
+            spark, pages, out, "fp-x", cfg, docs_fn=fused_fn, fail_buckets_above=4
+        )
+        assert crashed["buckets_processed"] == 1
+        s = run_ingest_pipeline(spark, pages, out, "fp-x", cfg=cfg, curated_mode="fused")
+        assert s["buckets_skipped"] == 1
+        urls = {
+            r.url
+            for r in spark.read.parquet(s["curated_path"]).filter(F.col("error").isNull()).collect()
+        }
+        assert urls == {keeper, other}
+
     def test_fused_rejects_cut_dup_spans(self, spark, tmp_path):
         with pytest.raises(ValueError, match="copy"):
             run_ingest_pipeline(
